@@ -1494,8 +1494,13 @@ def _q_kmeans_embeddings(spark, sf):
     # deterministic distributed KMeans (operators/clustering.py):
     # md5-seeded init, stable argmin, per-iteration 9dp DECIMAL means.
     # Iterative → rows-only; exact-equality property test vs a
-    # sequential numpy twin in tests/test_clustering.py.
-    return CL.kmeans_fit(load_table(spark, sf, "embeddings"), k=8, iterations=5)
+    # sequential numpy twin in tests/test_clustering.py. The centroid
+    # array is posexploded to one (dim, value) row per coordinate so
+    # every output column is atomic (the driver cannot hash a list).
+    fit = CL.kmeans_fit(load_table(spark, sf, "embeddings"), k=8, iterations=5)
+    return fit.select(
+        "cluster_id", "n_assigned", F.posexplode("centroid").alias("dim", "value")
+    )
 
 
 def _q_readability(spark, sf):

@@ -13,13 +13,17 @@ equality tests. This twin is engine-deterministic end-to-end:
   * assign — argmin squared L2 distance, ties broken by lowest
     centroid id (numpy stable argmin), one GEMM per Arrow batch
     (the justified-Python contract shared with the ANN module);
-  * update — per-(cluster, dim) means via posexplode + groupBy with
+  * update — per-(cluster, dim) means via explode + groupBy with
     DECIMAL(38,9) sums, rounded to 9 dp per iteration so float
     summation order can never drift the trajectory (the PageRank /
     drift discipline).
 
+One loop (``_lloyd``) serves every fit in the engine: plain k-means,
+the PQ subspace codebooks and the IVF coarse quantizer are its
+"spaces" (vector slices), fitted jointly over one pinned frame.
+
 Scale shape: each of the T iterations is one map-only assignment
-pass + one (cluster, dim)-keyed aggregate (map-side combined:
+pass + one (space, cluster, dim)-keyed aggregate (map-side combined:
 k·dim cells per partition regardless of rows); centroids are
 O(k·dim) driver-side fit parameters, never row data. The input is
 localCheckpoint'ed once so T passes don't re-run the scan lineage.
@@ -29,6 +33,8 @@ same recurrence (tests/test_clustering.py).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import pandas as pd
 
@@ -167,16 +173,126 @@ def probe_cells_expr(centers: list[list[float]], n_probe: int, dist_round: int):
     return probes
 
 
-def _seed_centroids(df: DataFrame, id_col: str, vec_col: str, k: int) -> list[list[float]]:
+class _Space(NamedTuple):
+    """One Lloyd recurrence inside a joint fit: ``k`` centroids over
+    the vector slice ``v[lo : lo + width]`` (``width=None``: the whole
+    vector) for ``iterations`` rounds, assigned by the rounded-distance
+    expression kernel, or by the Arrow GEMM kernel when ``dist_round``
+    is None."""
+
+    k: int
+    iterations: int
+    dist_round: int | None
+    lo: int = 0
+    width: int | None = None
+
+
+def _tag(s: int):
+    # capture s by value; transform's lambda must stay 2-arg
+    return lambda x, i: F.struct(
+        F.lit(s).cast("int").alias("s"),
+        F.col(f"cell{s}").alias("cluster_id"),
+        i.alias("dim"),
+        x.alias("x"),
+    )
+
+
+def _lloyd(
+    data: DataFrame, spaces: list[_Space]
+) -> list[tuple[list[list[float]], list[int]]]:
+    """THE Lloyd loop: fit every space of ``spaces`` over the pinned
+    ``(id, v)`` frame ``data`` and return one ``(centers, counts)`` per
+    space, ``counts`` from that space's last round.
+
+    The spaces are INDEPENDENT recurrences (none reads another's
+    centroids), so they run jointly:
+
+      * seed — ONE collect of the max-k rows with the smallest
+        md5(id); each space takes its own k-prefix of them, sliced to
+        its columns (exactly the rows a per-space seed collect returns);
+      * update — per round ONE job assigns every live space's cells and
+        aggregates every live space's (space, cluster, dim)
+        DECIMAL(38,9) sums, snapped to ``ITER_ROUND`` dp. The sums are
+        exact and order-independent, so each space's trajectory is
+        bit-identical to fitting it alone (test-pinned); a space past
+        its iteration budget stops contributing rows, and an empty
+        cluster keeps its centroid.
+
+    Driver round-trips: 1 seed collect + max(iterations) update
+    collects, whatever the number of spaces."""
+    if min(min(sp.k, sp.iterations) for sp in spaces) < 1:
+        raise ValueError("need k >= 1 and iterations >= 1")
+    seed_k = max(sp.k for sp in spaces)
     rows = (
-        df.select(F.md5(F.col(id_col).cast("string").cast("binary")).alias("h"), F.col(vec_col))
+        data.select(F.md5(F.col("id").cast("string").cast("binary")).alias("h"), "v")
         .orderBy("h")
-        .limit(k)
+        .limit(seed_k)
         .collect()
     )
-    if len(rows) < k:
-        raise ValueError(f"need at least k={k} rows, got {len(rows)}")
-    return [[float(x) for x in r[1]] for r in rows]
+    if len(rows) < seed_k:
+        raise ValueError(f"need at least k={seed_k} rows, got {len(rows)}")
+
+    def cut(sp: _Space, vec) -> list[float]:
+        hi = None if sp.width is None else sp.lo + sp.width
+        return [float(x) for x in vec[sp.lo : hi]]
+
+    centers = [[cut(sp, r.v) for r in rows[: sp.k]] for sp in spaces]
+    counts = [[0] * sp.k for sp in spaces]
+    for it in range(max(sp.iterations for sp in spaces)):
+        live = [s for s, sp in enumerate(spaces) if it < sp.iterations]
+        sel = []
+        for s in live:
+            sp = spaces[s]
+            vs = F.col("v") if sp.width is None else F.slice("v", sp.lo + 1, sp.width)
+            if sp.dist_round is None:
+                kernel = _nearest_centroid(centers[s])
+            else:
+                kernel = _nearest_centroid_expr(centers[s], sp.dist_round)
+            sel += [vs.alias(f"vs{s}"), kernel(vs).alias(f"cell{s}")]
+        cells = data.select(*sel).select(
+            F.explode(
+                F.flatten(F.array(*[F.transform(f"vs{s}", _tag(s)) for s in live]))
+            ).alias("e")
+        )
+        upd = (
+            cells.groupBy("e.s", "e.cluster_id", "e.dim")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.round(F.col("e.x"), ITER_ROUND).cast(_DEC)).alias("sm"),
+            )
+            .select(
+                "s",
+                "cluster_id",
+                "dim",
+                "n",
+                F.round(F.col("sm").cast("double") / F.col("n"), ITER_ROUND).alias("m"),
+            )
+            .collect()
+        )
+        for s in live:
+            counts[s] = [0] * spaces[s].k
+        for r in upd:  # a (cluster, dim) no row reached keeps its value
+            centers[r.s][r.cluster_id][r.dim] = float(r.m)
+            counts[r.s][r.cluster_id] = int(r.n)
+    return list(zip(centers, counts))
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The lazily pinned ``(id, v array<double>)`` frame every fit and
+    encode pass reads. Spread BEFORE the pin: the checkpoint freezes
+    partitioning, so a 1-3-split fixture scan would otherwise run every
+    assignment + update pass nearly single-core (hash-safe: the update
+    sums are exact DECIMALs and the argmin is per-row; a no-op on a
+    many-split scan). Lazy: the seed collect, the first action,
+    materializes it — one job instead of two."""
+    from safedata_pipeline_spark.partitioning import spread_small
+
+    return (
+        df.where(F.col(vec_col).isNotNull())
+        .select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
+        .transform(spread_small)
+        .transform(pin_lazy)
+    )
 
 
 def kmeans_fit_centers(
@@ -188,68 +304,18 @@ def kmeans_fit_centers(
     dist_round: int | None = None,
     _prepared: DataFrame | None = None,
 ) -> tuple[list[list[float]], list[int]]:
-    """Core Lloyd loop; returns (centers, counts) as driver-side fit
-    parameters — the form downstream compositions (``kmeans_assign``,
-    semantic dedup) consume directly. ``dist_round`` switches the
-    assignment to the pure-expression rounded-distance kernel
-    (``_nearest_centroid_expr``) whose trajectory a SQL oracle can
-    replay exactly; ``None`` keeps the Arrow GEMM kernel (fast path,
-    rows-only contract). ``_prepared`` accepts an already-pinned
-    ``(id, v)`` frame so a caller fitting several models on the same
-    vectors (ann_topk_ivf_pq: coarse quantizer + PQ codebooks) pays
-    the materialization once."""
-    if k < 1 or iterations < 1:
-        raise ValueError("need k >= 1 and iterations >= 1")
-    from safedata_pipeline_spark.partitioning import spread_small
-
-    # spread BEFORE the eager pin: the checkpoint freezes partitioning,
-    # so a 1-3-split fixture scan would otherwise run every assignment
-    # + update pass of every iteration nearly single-core. Hash-safe
-    # here (unlike float-moment aggs): the update sums are
-    # DECIMAL(38,9) of 9dp-rounded values — exact, order-independent —
-    # and the assignment/argmin is per-row. No-op on a many-split scan.
-    data = _prepared
-    if data is None:
-        # lazy pin: the seed collect right below is the first action
-        # and materializes the checkpoint — one job instead of two
-        data = (
-            df.where(F.col(vec_col).isNotNull())
-            .select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
-            .transform(spread_small)
-            .transform(pin_lazy)
-        )
-    centers = _seed_centroids(data, "id", "v", k)
-    counts: list[int] = [0] * k
-    for _ in range(iterations):
-        if dist_round is None:
-            cells = data.select(_nearest_centroid(centers)("v").alias("cluster_id"), "v")
-        else:
-            cells = data.select(
-                _nearest_centroid_expr(centers, dist_round)(F.col("v")).alias("cluster_id"),
-                "v",
-            )
-        upd = (
-            cells.select("cluster_id", F.posexplode("v").alias("dim", "x"))
-            .groupBy("cluster_id", "dim")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.round(F.col("x"), ITER_ROUND).cast(_DEC)).alias("s"),
-            )
-            .select(
-                "cluster_id",
-                "dim",
-                "n",
-                F.round(F.col("s").cast("double") / F.col("n"), ITER_ROUND).alias("m"),
-            )
-            .collect()
-        )
-        new = [list(c) for c in centers]  # empty clusters keep their centroid
-        counts = [0] * k
-        for r in upd:
-            new[r.cluster_id][r.dim] = float(r.m)
-            counts[r.cluster_id] = int(r.n)
-        centers = new
-    return centers, counts
+    """One-space ``_lloyd`` fit; returns (centers, counts) as
+    driver-side fit parameters — the form downstream compositions
+    (``kmeans_assign``, semantic dedup) consume directly.
+    ``dist_round`` switches the assignment to the pure-expression
+    rounded-distance kernel (``_nearest_centroid_expr``) whose
+    trajectory a SQL oracle can replay exactly; ``None`` keeps the
+    Arrow GEMM kernel (fast path, rows-only contract). ``_prepared``
+    accepts an already-pinned ``(id, v)`` frame so a caller fitting
+    several models on the same vectors pays the materialization
+    once."""
+    data = _vectors(df, id_col, vec_col) if _prepared is None else _prepared
+    return _lloyd(data, [_Space(k, iterations, dist_round)])[0]
 
 
 def kmeans_fit(

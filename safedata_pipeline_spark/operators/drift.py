@@ -18,9 +18,9 @@ All counts stay integer until the final division, so the cumulative
 arithmetic is exact and engine-independent.
 
 Scale notes: exact ECDF needs a global order, but NOT a global window.
-``_two_phase_cum`` range-partitions the distinct-value table, computes
-per-partition cumulative sums in parallel, and broadcasts per-partition
-prefix offsets (an O(partitions) collected fit-parameter table) — the
+``partitioning.ranged_prefix`` range-partitions the distinct-value
+table, computes per-partition cumulative sums in parallel, and
+broadcasts per-partition prefix offsets (an O(partitions) table) — the
 same trick as ``protect._with_row_index``. No stage ever sorts more
 than one partition's values in one task. For 100 TB continuous data
 ``ks_statistic_binned`` (fixed-width bins, pure groupBy) bounds the
@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from safedata_pipeline_spark.checkpoint import pin_eager, pin_lazy
+from safedata_pipeline_spark.partitioning import ranged_prefix
 from pyspark.sql.types import NumericType
 
 ROUND_N = 6
@@ -53,101 +54,42 @@ def _tagged_union(df_a: DataFrame, df_b: DataFrame, col: str) -> DataFrame:
     return a.unionByName(b)
 
 
-def _two_phase_cum(
-    g: DataFrame, key_col: str, val_col: str, keep_val: bool = False
-) -> DataFrame:
-    """Exact per-key cumulative (ka, kb) counts with NO single-task
-    window — the scale fix for the ECDF construction.
-
-    Phase 1: range-partition the distinct-value table on (key, value)
-    and pin partition ids (``localCheckpoint`` materializes the rows
-    WITH their ``spark_partition_id``, so both downstream jobs see the
-    same placement). Per-partition (key, pid) totals are collected —
-    an O(partitions × keys-spanning-boundaries) fit-parameter table,
-    same class as one-hot's category list.
-
-    Phase 2: prefix offsets per (key, pid) are computed driver-side and
-    broadcast back; the cumulative window is ``partitionBy(key, pid)``
-    — every task sorts only its own contiguous value range. All counts
-    stay integer, so results are bit-identical to the single-window
-    form. Output: (key, ca, cb, na, nb), one row per distinct value.
-    """
-    spark = g.sparkSession
-    npart = max(int(spark.conf.get("spark.sql.shuffle.partitions", "8")), 1)
-    # ONE materialization total: g is persisted lazily so
-    # repartitionByRange's boundary-sampling job (which executes the
-    # child lineage) doubles as the cache fill; the single eager
-    # checkpoint then reads the cache, and both downstream jobs (the
-    # per-partition totals collect and the final join) read the
-    # checkpoint with pinned partition ids. r3 shipped TWO eager
-    # checkpoints here — the extra blocking job dominated ks_drift.
-    g = g.persist()
-    rp = (
-        g.repartitionByRange(npart, F.col(key_col), F.col(val_col))
-        .withColumn("__pid", F.spark_partition_id())
-        .transform(pin_eager)
-    )
-    g.unpersist()
-    # prefix offsets per (key, pid) as a WINDOW over the tiny totals
-    # frame (O(partitions × keys) rows) instead of a driver collect +
-    # createDataFrame round-trip — one less blocking barrier per use
-    # (ks_drift pays this chain every run); integers throughout, so
-    # results stay bit-identical to the collected form
-    tot = rp.groupBy(key_col, "__pid").agg(
-        F.sum("ka").alias("tka"), F.sum("kb").alias("tkb")
-    )
-    w_prev = (
-        Window.partitionBy(key_col)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_all = Window.partitionBy(key_col)
-    off = tot.select(
-        key_col,
-        "__pid",
-        F.coalesce(F.sum("tka").over(w_prev), F.lit(0)).alias("offa"),
-        F.coalesce(F.sum("tkb").over(w_prev), F.lit(0)).alias("offb"),
-        F.sum("tka").over(w_all).alias("na"),
-        F.sum("tkb").over(w_all).alias("nb"),
-    )
-    w_local = Window.partitionBy(key_col, "__pid").orderBy(val_col)
-    # keep_val lets callers join the cumulative counts back by value
-    # (quantile_rank); the drift paths only need the aggregates
-    extra = [val_col] if keep_val else []
-    return rp.join(F.broadcast(off), [key_col, "__pid"]).select(
-        key_col,
-        *extra,
-        (F.sum("ka").over(w_local) + F.col("offa")).alias("ca"),
-        (F.sum("kb").over(w_local) + F.col("offb")).alias("cb"),
-        "na",
-        "nb",
-    )
-
-
 def ks_statistic(df_a: DataFrame, df_b: DataFrame, col: str) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov statistic on ``col`` → 1 row
     ``(ks_stat double)``; NULL when either side has <5 non-null rows.
-    Cumulative ECDF counts come from ``_two_phase_cum`` — parallel
-    across value ranges, never a one-task global window."""
+    Cumulative ECDF counts come from ``partitioning.ranged_prefix`` —
+    parallel across value ranges, never a one-task global window."""
     u = _tagged_union(df_a, df_b, col)
     g = (
         u.groupBy("v")
         .agg(F.sum("ka").alias("ka"), F.sum("kb").alias("kb"))
         .withColumn("column", F.lit("_"))
     )
-    c = _two_phase_cum(g, "column", "v")
-    return c.agg(
-        F.when(
-            (F.max("na") >= MIN_KS_ROWS) & (F.max("nb") >= MIN_KS_ROWS),
-            F.round(
-                F.max(
-                    F.abs(
-                        F.col("ca") / F.col("na") - F.col("cb") / F.col("nb")
-                    )
-                ),
-                ROUND_N,
-            ),
-        ).alias("ks_stat")
+    return _ecdf(g, "v").agg(_ks_stat().alias("ks_stat"))
+
+
+def _ecdf(g: DataFrame, val_col: str) -> DataFrame:
+    """Per-column cumulative side counts ``(column, ca, cb, na, nb)``
+    over the distinct-value table ``g`` (``column``, ``val_col``,
+    ``ka``, ``kb``)."""
+    return ranged_prefix(g, [val_col], ["ka", "kb"], ["column"]).select(
+        "column",
+        F.col("__cum_ka").alias("ca"),
+        F.col("__cum_kb").alias("cb"),
+        F.col("__tot_ka").alias("na"),
+        F.col("__tot_kb").alias("nb"),
+    )
+
+
+def _ks_stat() -> F.Column:
+    """max |ca/na − cb/nb| over an ECDF frame; NULL when either side
+    has fewer than ``MIN_KS_ROWS`` values."""
+    return F.when(
+        (F.max("na") >= MIN_KS_ROWS) & (F.max("nb") >= MIN_KS_ROWS),
+        F.round(
+            F.max(F.abs(F.col("ca") / F.col("na") - F.col("cb") / F.col("nb"))),
+            ROUND_N,
+        ),
     )
 
 
@@ -162,8 +104,9 @@ def _bounded_cum(
     running sum is a window PARTITIONED by block. Integer math — bit
     identical to the single-window form. Adds ``__cum_<col>`` columns.
 
-    This is the expression-only sibling of ``_two_phase_cum`` (which
-    handles unbounded distinct-value tables via pinned partition ids);
+    This is the expression-only sibling of
+    ``partitioning.ranged_prefix`` (which handles unbounded
+    distinct-value tables via pinned partition ids);
     binned constructions are bounded by design, so the offsets can be
     a join instead of a driver round-trip."""
     gb = g.withColumn("__blk", F.floor(F.col(val_col) / F.lit(span)))
@@ -221,12 +164,7 @@ def ks_statistic_binned(df_a: DataFrame, df_b: DataFrame, col: str, bins: int = 
             "nb",
         )
     )
-    return c.agg(
-        F.when(
-            (F.max("na") >= MIN_KS_ROWS) & (F.max("nb") >= MIN_KS_ROWS),
-            F.round(F.max(F.abs(F.col("ca") / F.col("na") - F.col("cb") / F.col("nb"))), ROUND_N),
-        ).alias("ks_stat")
-    )
+    return c.agg(_ks_stat().alias("ks_stat"))
 
 
 def chi2_categorical(df_a: DataFrame, df_b: DataFrame, col: str, na_label: str = "NA") -> DataFrame:
@@ -312,7 +250,7 @@ def distribution_drift(
     rounding) are identical to the per-column operators above.
 
     ``exact=True`` computes exact per-column ECDFs via
-    ``_two_phase_cum`` (parallel over value ranges — no per-column
+    ``partitioning.ranged_prefix`` (parallel over value ranges — no per-column
     single-task window). ``exact=False`` is the 100 TB continuous-data
     route: each column's values collapse into ≤``bins`` fixed-width
     bins first (the ``ks_statistic_binned`` construction, error ≤ one
@@ -360,13 +298,7 @@ def distribution_drift(
                 "kb",
             )
         g = u.groupBy("column", "vnum").agg(F.sum("ka").alias("ka"), F.sum("kb").alias("kb"))
-        c = _two_phase_cum(g, "column", "vnum")
-        ks = c.groupBy("column").agg(
-            F.when(
-                (F.max("na") >= MIN_KS_ROWS) & (F.max("nb") >= MIN_KS_ROWS),
-                F.round(F.max(F.abs(F.col("ca") / F.col("na") - F.col("cb") / F.col("nb"))), ROUND_N),
-            ).alias("ks_stat")
-        )
+        ks = _ecdf(g, "vnum").groupBy("column").agg(_ks_stat().alias("ks_stat"))
         parts.append(
             ks.select(
                 "column",

@@ -38,19 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from safedata_pipeline_spark.partitioning import spread_small_pinned
-
-
-def _shuffle_partitions(spark) -> int:
-    """Shuffle-partition count with a defensive fallback (ADVICE r12):
-    on platforms where ``spark.sql.shuffle.partitions`` holds a
-    non-numeric value (e.g. 'auto' under adaptive serverless runtimes)
-    the int() cast would raise before the job runs — fall back to the
-    cluster default parallelism instead."""
-    try:
-        return max(int(spark.conf.get("spark.sql.shuffle.partitions", "8")), 1)
-    except ValueError:
-        return max(int(spark.sparkContext.defaultParallelism), 1)
+from safedata_pipeline_spark.partitioning import ranged_prefix, spread_small_pinned
 
 
 def _deletion_variants(value, length):
@@ -355,11 +343,9 @@ def sorted_neighborhood_pairs(
     n·(window−1) candidate pairs — immune to hot-token skew by
     construction.
 
-    Spark-first global rank with NO single-task sort: range-partition
-    on (key, id) with pinned partition ids, per-partition counts →
-    prefix offsets via a window over the O(partitions)-row totals
-    frame, then per-partition ``row_number`` — every task sorts only
-    its contiguous key range (the ``_two_phase_cum`` discipline).
+    Spark-first global rank with NO single-task sort: the rank is
+    ``partitioning.ranged_prefix``'s running count over (key, id) —
+    every task sorts only its contiguous key range.
     Window pairs become an EQUI-join: with block size W = window−1,
     any qualifying pair spans at most adjacent blocks, so each left
     row probes exactly two block keys. Deterministic end to end
@@ -373,28 +359,12 @@ def sorted_neighborhood_pairs(
         raise ValueError("window must be >= 2")
     if max_dist < 0:
         raise ValueError("max_dist must be >= 0")
-    from pyspark.sql import Window as W
-
-    from safedata_pipeline_spark.checkpoint import pin_eager
-
     key, rid = F.col(col), F.col(id_col)
-    rows = df.where(key.isNotNull()).select(key.alias("__k"), rid.alias("__id"))
-    spark = df.sparkSession
-    npart = _shuffle_partitions(spark)
-    rp = (
-        rows.repartitionByRange(npart, F.col("__k"), F.col("__id"))
-        .withColumn("__pid", F.spark_partition_id())
-        .transform(pin_eager)
+    rows = df.where(key.isNotNull()).select(
+        key.alias("__k"), rid.alias("__id"), F.lit(1).alias("n")
     )
-    tot = rp.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    off_w = W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = tot.select(
-        "__pid", F.coalesce(F.sum("__cnt").over(off_w), F.lit(0)).alias("__off")
-    )
-    rn = F.row_number().over(W.partitionBy("__pid").orderBy("__k", "__id"))
-    ranked = (
-        rp.join(F.broadcast(offsets), on="__pid")
-        .select("__k", "__id", (F.col("__off") + rn).alias("__rank"))
+    ranked = ranged_prefix(rows, ["__k", "__id"], ["n"]).select(
+        "__k", "__id", F.col("__cum_n").alias("__rank")
     )
     bw = window - 1
     blk = lambda r: F.floor((r - 1) / F.lit(bw))  # noqa: E731

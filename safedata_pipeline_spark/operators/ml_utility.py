@@ -24,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from safedata_pipeline_spark.checkpoint import pin_eager, pin_lazy
+from safedata_pipeline_spark.checkpoint import pin_lazy
+from safedata_pipeline_spark.partitioning import ranged_prefix
 from pyspark.sql.types import NumericType
 
 STRATIFY_MAX_CLASSES = 20  # reference utility.py:137
@@ -124,41 +125,6 @@ def model_utility_check(
 # Rank-based AUC (Mann–Whitney) — aggregate-first, exact, oracle-able
 # ---------------------------------------------------------------------------
 
-def _ranged_cum(g: DataFrame, val_col: str, cols: list[str]) -> DataFrame:
-    """Exact cumulative sums over an UNBOUNDED distinct-value table
-    with no single-task window: range-partition on the value, pin
-    partition ids (localCheckpoint), per-partition totals → prefix
-    offsets via a bounded broadcast self-join (≤ npart² pairs), then a
-    window PARTITIONED by pid — each task sorts only its own value
-    range. Integer math, bit-identical to the single-window form.
-    Adds ``__cum_<col>`` (inclusive). The join-offset sibling of
-    drift._two_phase_cum (which is specialized to the ECDF ka/kb
-    shape)."""
-    spark = g.sparkSession
-    npart = max(int(spark.conf.get("spark.sql.shuffle.partitions", "8")), 1)
-    g = g.persist()
-    rp = (
-        g.repartitionByRange(npart, F.col(val_col))
-        .withColumn("__pid", F.spark_partition_id())
-        .transform(pin_eager)
-    )
-    g.unpersist()
-    n = list(range(len(cols)))
-    bt = rp.groupBy("__pid").agg(*[F.sum(cols[i]).alias(f"__t{i}") for i in n])
-    bt2 = bt.select(F.col("__pid").alias("__b2"), *[F.col(f"__t{i}") for i in n])
-    off = (
-        bt.select(F.col("__pid").alias("__b1"))
-        .join(F.broadcast(bt2), F.col("__b2") < F.col("__b1"), "left")
-        .groupBy("__b1")
-        .agg(*[F.coalesce(F.sum(f"__t{i}"), F.lit(0)).alias(f"__o{i}") for i in n])
-    )
-    w_in = Window.partitionBy("__pid").orderBy(val_col)
-    out = rp.join(F.broadcast(off), F.col("__pid") == F.col("__b1"))
-    for i, c in enumerate(cols):
-        out = out.withColumn(f"__cum_{c}", F.sum(c).over(w_in) + F.col(f"__o{i}"))
-    return out.drop("__pid", "__b1", *[f"__o{i}" for i in n])
-
-
 def binary_auc(df: DataFrame, score_col: str, label: "F.Column") -> DataFrame:
     """Exact ROC-AUC of a score against a boolean label, by the
     Mann–Whitney identity with tie correction:
@@ -166,7 +132,7 @@ def binary_auc(df: DataFrame, score_col: str, label: "F.Column") -> DataFrame:
 
     Aggregate-FIRST: one groupBy(score) collapses the data to the
     distinct-score table (pos/neg counts per score), the cumulative
-    runs over that table via ``_ranged_cum`` (range-partitioned, no
+    runs over that table via ``partitioning.ranged_prefix`` (range-partitioned, no
     global sort of rows, no single-task window), and the finish is one
     tiny aggregate. All counts integer → the result is deterministic
     and hash-matches any engine. Output: (n_pos, n_neg, auc)."""
@@ -176,7 +142,7 @@ def binary_auc(df: DataFrame, score_col: str, label: "F.Column") -> DataFrame:
     g = e.groupBy("s").agg(
         F.sum("y").alias("pos"), F.sum(1 - F.col("y")).alias("neg")
     )
-    c = _ranged_cum(g, "s", ["neg"])
+    c = ranged_prefix(g, ["s"], ["neg"])
     num = F.sum(
         2 * F.col("pos") * (F.col("__cum_neg") - F.col("neg")) + F.col("pos") * F.col("neg")
     )

@@ -274,7 +274,7 @@ def _percentiles_from_tagged(
     (tests/test_profile.py pins this), so the oracle SQL is unchanged.
 
     Shape: the counts frame is |Σ distinct| rows; the cumulative comes
-    from ``_two_phase_cum`` (range-partitioned parallel prefix sums —
+    from ``partitioning.ranged_prefix`` (range-partitioned parallel prefix sums —
     r12: a ``partitionBy(column)`` window put a near-unique double
     column's ~n distinct values in ONE sort task, measured as
     basic_stats' dominant stage at sf0.1: 1.5s of the 2.2s percentile
@@ -287,25 +287,20 @@ def _percentiles_from_tagged(
         return tagged.sparkSession.createDataFrame(
             [], "column string" + "".join(f", __pq{i} double" for i in range(len(pcts)))
         )
-    from safedata_pipeline_spark.operators.drift import _two_phase_cum
+    from safedata_pipeline_spark.partitioning import ranged_prefix
 
     nums = tagged.where(
         F.col("column").isin(*num_cols) & F.col("val_num").isNotNull()
-    ).select(
-        "column",
-        F.col("val_num").alias("x"),
-        F.col("cnt").alias("ka"),
-        F.lit(0).alias("kb"),
-    )
-    d = _two_phase_cum(nums, "column", "x", keep_val=True)
+    ).select("column", F.col("val_num").alias("x"), "cnt")
+    d = ranged_prefix(nums, ["x"], ["cnt"], ["column"])
     aggs = []
     finish = []
     for i, p in enumerate(pcts):
-        pos = F.lit(float(p)) * (F.col("na") - 1)
+        pos = F.lit(float(p)) * (F.col("__tot_cnt") - 1)
         k = F.floor(pos)
         aggs += [
-            F.min(F.when(F.col("ca") >= k + 1, F.col("x"))).alias(f"__lo{i}"),
-            F.min(F.when(F.col("ca") >= k + 2, F.col("x"))).alias(f"__hi{i}"),
+            F.min(F.when(F.col("__cum_cnt") >= k + 1, F.col("x"))).alias(f"__lo{i}"),
+            F.min(F.when(F.col("__cum_cnt") >= k + 2, F.col("x"))).alias(f"__hi{i}"),
             F.max(pos).alias(f"__pos{i}"),
         ]
         posc, kc = F.col(f"__pos{i}"), F.floor(F.col(f"__pos{i}"))
@@ -600,7 +595,9 @@ def robust_stats(df: DataFrame, cols: list[str]) -> DataFrame:
         _r6(F.col("__pq2")).alias("p75"),
         _r6(F.col("__pq2") - F.col("__pq0")).alias("iqr"),
     )
-    return qdf.join(mads, on="column", how="left")
+    # mads is O(columns) rows, but its size estimate (through
+    # ranged_prefix's checkpointed frame) does not show it
+    return qdf.join(F.broadcast(mads), on="column", how="left")
 
 
 def skew_report(df: DataFrame, key_col: str) -> DataFrame:
@@ -669,23 +666,21 @@ def quantile_rank(df: DataFrame, col: str) -> DataFrame:
 
     Scale shape: a global ``cume_dist`` window would sort all rows in
     ONE task; instead the distinct-value table runs through
-    ``_two_phase_cum`` (range-partitioned parallel prefix sums) and
+    ``partitioning.ranged_prefix`` (range-partitioned parallel prefix sums) and
     the per-value ranks join back — the join key is the value, whose
     distinct table is the small side. Results are bit-identical to
     the single-window form (integer counts, one final division).
     """
-    from safedata_pipeline_spark.operators.drift import _two_phase_cum
+    from safedata_pipeline_spark.partitioning import ranged_prefix
 
     g = (
         df.where(F.col(col).isNotNull())
         .select(F.col(col).alias("__v"))
         .groupBy("__v")
-        .agg(F.count(F.lit(1)).alias("ka"))
-        .withColumns({"kb": F.lit(0), "__key": F.lit("_")})
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-    c = _two_phase_cum(g, "__key", "__v", keep_val=True)
-    ranks = c.select(
-        "__v", F.round(F.col("ca") / F.col("na"), 6).alias("q_rank")
+    ranks = ranged_prefix(g, ["__v"], ["n"]).select(
+        "__v", F.round(F.col("__cum_n") / F.col("__tot_n"), 6).alias("q_rank")
     )
     return df.join(
         ranks, on=df[col].eqNullSafe(F.col("__v")), how="left"
@@ -1006,12 +1001,12 @@ def weighted_quantiles(
 
     Aggregate-first: groupBy(value) collapses to the distinct-value
     table with DECIMAL weight sums; the cumulative runs via the
-    range-partitioned ``_ranged_cum`` (no global row sort, no
+    range-partitioned ``partitioning.ranged_prefix`` (no global row sort, no
     single-task window); the pick is one tiny min(struct) aggregate.
     Deterministic: weights are 6dp DECIMAL, so cumulative boundaries
     are exact and any engine picks identical values. Zero/negative/
     NULL weights drop (mass must be positive)."""
-    from safedata_pipeline_spark.operators.ml_utility import _ranged_cum
+    from safedata_pipeline_spark.partitioning import ranged_prefix
 
     dec = "decimal(38,6)"
     g = (
@@ -1019,12 +1014,10 @@ def weighted_quantiles(
         .groupBy(F.col(col).alias("v"))
         .agg(F.sum(F.round(F.col(weight_col).cast("double"), 6).cast(dec)).alias("w"))
     )
-    c = _ranged_cum(g, "v", ["w"])
-    tot = g.agg(F.sum("w").alias("tw"))
-    c = c.crossJoin(F.broadcast(tot))
-    aggs = [F.round(F.max("tw").cast("double"), 6).alias("total_weight")]
+    c = ranged_prefix(g, ["v"], ["w"])
+    aggs = [F.round(F.max("__tot_w").cast("double"), 6).alias("total_weight")]
     for p in probs:
-        target = F.lit(float(p)) * F.col("tw").cast("double")
+        target = F.lit(float(p)) * F.col("__tot_w").cast("double")
         pick = F.min(
             F.when(F.col("__cum_w").cast("double") >= target, F.col("v"))
         ).alias(f"p{int(round(p * 100)):02d}")

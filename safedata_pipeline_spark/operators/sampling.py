@@ -1162,60 +1162,26 @@ def token_budget_select(
     fraction). Unscored docs (<1 token) can't be ranked and are
     excluded by contract.
 
-    Scale path (the ccnet_perplexity_buckets / ``_two_phase_cum``
-    discipline, built in from day one — not a docstring promise):
-    range-partition the pinned score frame on (score, id), per-
-    partition integer token sums → prefix offsets via a window over
-    the O(partitions)-row totals frame, then per-partition running
-    sums + offset. BIGINT sums are associative, so the two-phase
-    running total is bit-identical to the single-window form the SQL
-    oracle replays, and no task ever sorts more than its own
-    contiguous score range. Output: (id, n_tokens, avg_neg_logprob,
-    cum_tokens), the kept prefix.
+    Scale path: the running token sum and T are
+    ``partitioning.ranged_prefix``'s running and total sum of
+    n_tokens over (score, id). BIGINT sums are associative, so the
+    two-phase running total is bit-identical to the single-window
+    form the SQL oracle replays, and no task ever sorts more than its
+    own contiguous score range. Output: (id, n_tokens,
+    avg_neg_logprob, cum_tokens), the kept prefix.
     """
     if budget_num <= 0 or budget_den <= 0:
         raise ValueError("budget fraction must be positive")
-    from pyspark.sql import Window
-
-    from safedata_pipeline_spark.checkpoint import pin_eager
-    from safedata_pipeline_spark.operators.fuzzy import _shuffle_partitions
     from safedata_pipeline_spark.operators.text import unigram_logprob
+    from safedata_pipeline_spark.partitioning import ranged_prefix
 
-    # pin the scored frame: the budget total and the ranked branch
-    # would otherwise each re-run the corpus LM (2 corpus passes -> 1)
-    scored = pin_eager(unigram_logprob(df, text_col=text_col, id_col=id_col))
+    scored = unigram_logprob(df, text_col=text_col, id_col=id_col)
     has = scored.where(F.col("avg_neg_logprob").isNotNull())
-    tot = has.agg(
-        F.expr(f"(sum(n_tokens) * {budget_num}) div {budget_den}").alias("__B")
-    )
-    npart = _shuffle_partitions(df.sparkSession)
-    rp = (
-        has.repartitionByRange(
-            npart, F.col("avg_neg_logprob"), F.col(id_col)
-        )
-        .withColumn("__pid", F.spark_partition_id())
-        .transform(pin_eager)
-    )
-    ptot = rp.groupBy("__pid").agg(F.sum("n_tokens").alias("__ptok"))
-    off_w = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = ptot.select(
-        "__pid",
-        F.coalesce(F.sum("__ptok").over(off_w), F.lit(0)).alias("__off"),
-    )
-    w_local = Window.partitionBy("__pid").orderBy(
-        F.col("avg_neg_logprob").asc(), F.col(id_col).asc()
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    cum = (
-        rp.join(F.broadcast(offsets), on="__pid")
-        .withColumn("__cum", F.sum("n_tokens").over(w_local) + F.col("__off"))
-    )
-    return (
-        cum.join(F.broadcast(tot))
-        .where(F.col("__cum") <= F.col("__B"))
-        .select(
-            id_col,
-            F.col("n_tokens").cast("bigint").alias("n_tokens"),
-            "avg_neg_logprob",
-            F.col("__cum").cast("bigint").alias("cum_tokens"),
-        )
+    cum = ranged_prefix(has, ["avg_neg_logprob", id_col], ["n_tokens"])
+    budget = F.expr(f"(__tot_n_tokens * {budget_num}) div {budget_den}")
+    return cum.where(F.col("__cum_n_tokens") <= budget).select(
+        id_col,
+        F.col("n_tokens").cast("bigint").alias("n_tokens"),
+        "avg_neg_logprob",
+        F.col("__cum_n_tokens").cast("bigint").alias("cum_tokens"),
     )

@@ -1929,114 +1929,20 @@ def pq_fit(
     training cost does not scale with the corpus.
 
     The ``n_sub`` subspace fits are INDEPENDENT recurrences over
-    slices of the SAME rows, so they run JOINTLY: one pinned (id, v)
-    frame, ONE seed collect (slices of the same md5-ordered rows), and
-    per Lloyd round ONE job that assigns every subspace's cells and
-    aggregates every subspace's (s, cluster, dim) DECIMAL(38,9) sums
-    together (order-independent, bit-identical to the sequential
-    per-subspace loop — test-pinned). The sequential form paid
-    n_sub × (pin + seed + T collects) driver round-trips — 32 jobs at
-    the default 8×2 vs 4 here — with identical centroids.
-    ``_prepared`` lets a caller that already pinned the (id, v) frame
-    (ann_topk_ivf_pq shares it with the coarse quantizer fit) skip the
-    pin.
+    slices of the SAME rows, so they run as the spaces of ONE joint
+    ``clustering._lloyd`` fit: one seed collect and one update job per
+    round for all subspaces, bit-identical to fitting each subspace
+    alone (test-pinned). ``_prepared`` lets a caller that already
+    pinned the (id, v) frame (the encode passes) skip the pin.
     """
     if dim % n_sub != 0:
         raise ValueError("dim must be divisible by n_sub")
-    if codebook_k < 1 or iterations < 1:
-        raise ValueError("need codebook_k >= 1 and iterations >= 1")
-    from safedata_pipeline_spark.operators.clustering import (
-        _DEC,
-        ITER_ROUND,
-        _nearest_centroid_expr,
-    )
-    from safedata_pipeline_spark.partitioning import spread_small
+    from safedata_pipeline_spark.operators.clustering import _Space, _lloyd, _vectors
 
     sub = dim // n_sub
-    data = _prepared
-    if data is None:
-        # lazy pin: the seed collect below is the first action and
-        # materializes the checkpoint — one job instead of two
-        data = (
-            df.where(F.col(vec_col).isNotNull())
-            .select(
-                F.col(id_col).alias("id"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            )
-            .transform(spread_small)
-            .transform(pin_lazy)
-        )
-    seed_rows = (
-        data.select(
-            F.md5(F.col("id").cast("string").cast("binary")).alias("h"), F.col("v")
-        )
-        .orderBy("h")
-        .limit(codebook_k)
-        .collect()
-    )
-    if len(seed_rows) < codebook_k:
-        raise ValueError(
-            f"need at least k={codebook_k} rows, got {len(seed_rows)}"
-        )
-    books = [
-        [
-            [float(x) for x in r[1][s * sub : (s + 1) * sub]]
-            for r in seed_rows
-        ]
-        for s in range(n_sub)
-    ]
-    for _ in range(iterations):
-        sel = []
-        for s in range(n_sub):
-            vs = F.slice(F.col("v"), s * sub + 1, sub)
-            sel.append(vs.alias(f"vs{s}"))
-            sel.append(
-                _nearest_centroid_expr(books[s], dist_round)(vs).alias(f"cell{s}")
-            )
-        assigned = data.select(*sel)
-
-        def _tag(s: int):
-            # capture s by value; transform's lambda must stay 2-arg
-            return lambda x, i: F.struct(
-                F.lit(s).cast("int").alias("s"),
-                F.col(f"cell{s}").alias("cluster_id"),
-                i.alias("dim"),
-                x.alias("x"),
-            )
-
-        long = assigned.select(
-            F.explode(
-                F.flatten(
-                    F.array(
-                        *[
-                            F.transform(F.col(f"vs{s}"), _tag(s))
-                            for s in range(n_sub)
-                        ]
-                    )
-                )
-            ).alias("e")
-        )
-        upd = (
-            long.groupBy("e.s", "e.cluster_id", "e.dim")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.round(F.col("e.x"), ITER_ROUND).cast(_DEC)).alias("sm"),
-            )
-            .select(
-                "s",
-                "cluster_id",
-                "dim",
-                F.round(F.col("sm").cast("double") / F.col("n"), ITER_ROUND).alias(
-                    "m"
-                ),
-            )
-            .collect()
-        )
-        new_books = [[list(c) for c in b] for b in books]
-        for r in upd:
-            new_books[r.s][r.cluster_id][r.dim] = float(r.m)
-        books = new_books
-    return books
+    data = _vectors(df, id_col, vec_col) if _prepared is None else _prepared
+    spaces = [_Space(codebook_k, iterations, dist_round, s * sub, sub) for s in range(n_sub)]
+    return [books for books, _ in _lloyd(data, spaces)]
 
 
 def _pq_code_cols(codebooks: list[list[list[float]]], v, dim: int, dist_round: int):
@@ -2078,121 +1984,26 @@ def _joint_coarse_pq_fit(
     dist_round: int,
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
     """Fit the IVF coarse quantizer AND the PQ codebooks JOINTLY over
-    one pinned ``(id, v)`` frame. The coarse Lloyd recurrence
-    (``kmeans_fit_centers``) and the n_sub subspace recurrences
-    (``pq_fit``) are INDEPENDENT — none reads another's centroids — so
-    each Lloyd round aggregates every active space's
-    (space, cluster, dim) DECIMAL(38,9) sums in ONE job, and both
-    seeds come from ONE collect of the same md5-ordered rows (each fit
-    takes its own k-prefix / subspace slices of those rows, exactly
-    the rows its sequential seed collect returns).
-
-    Bit-identical to running the two fits sequentially: same seed
-    rule, same per-space rounded-argmin assignment kernel, same exact
-    DECIMAL sums (order-independent), same round(sum/n, ITER_ROUND)
-    mean snap, same empty-cluster keep rule; a space past its
-    iteration budget simply stops contributing rows. Pinned by
-    tests/test_similarity.py::test_joint_coarse_pq_fit_matches_sequential.
-
-    Driver round-trips: 1 seed collect + max(T_coarse, T_pq) update
-    collects — the sequential chain paid 2 seeds + T_coarse + T_pq
-    jobs over the same pinned rows (guide §5: the driver does almost
-    no work, so the round-trips WERE the cost at fit scale)."""
-    from safedata_pipeline_spark.operators.clustering import (
-        _DEC,
-        ITER_ROUND,
-        _nearest_centroid_expr,
-    )
-
+    one pinned ``(id, v)`` frame: the coarse space (the full vector,
+    ``kmeans_fit_centers``'s recurrence) and the n_sub subspaces
+    (``pq_fit``'s) are the spaces of ONE ``clustering._lloyd`` fit —
+    1 seed collect + max(T_coarse, T_pq) update collects, where the
+    two fits run apart paid 2 seeds + T_coarse + T_pq jobs over the
+    same pinned rows. Bit-identical to fitting each space alone; pinned
+    by tests/test_similarity.py::test_joint_coarse_pq_fit_matches_sequential."""
     if dim % n_sub != 0:
         raise ValueError("dim must be divisible by n_sub")
-    if min(num_cells, codebook_k) < 1 or min(coarse_iterations, pq_iterations) < 1:
-        raise ValueError("need k >= 1 and iterations >= 1")
+    from safedata_pipeline_spark.operators.clustering import _Space, _lloyd
+
     sub = dim // n_sub
-    k_seed = max(num_cells, codebook_k)
-    seed_rows = (
-        data.select(
-            F.md5(F.col("id").cast("string").cast("binary")).alias("h"), F.col("v")
-        )
-        .orderBy("h")
-        .limit(k_seed)
-        .collect()
-    )
-    if len(seed_rows) < k_seed:
-        raise ValueError(f"need at least k={k_seed} rows, got {len(seed_rows)}")
-    centers = [[float(x) for x in r[1]] for r in seed_rows[:num_cells]]
-    books = [
+    *books, (centers, _) = _lloyd(
+        data,
         [
-            [float(x) for x in r[1][s * sub : (s + 1) * sub]]
-            for r in seed_rows[:codebook_k]
-        ]
-        for s in range(n_sub)
-    ]
-    for it in range(max(coarse_iterations, pq_iterations)):
-        sel = []
-        spaces = []
-        if it < pq_iterations:
-            for s in range(n_sub):
-                vs = F.slice(F.col("v"), s * sub + 1, sub)
-                sel.append(vs.alias(f"vs{s}"))
-                sel.append(
-                    _nearest_centroid_expr(books[s], dist_round)(vs).alias(f"cell{s}")
-                )
-                spaces.append(s)
-        if it < coarse_iterations:
-            # the coarse space rides the SAME joint aggregate under
-            # tag s = n_sub, over the full vector
-            sel.append(F.col("v").alias(f"vs{n_sub}"))
-            sel.append(
-                _nearest_centroid_expr(centers, dist_round)(F.col("v")).alias(
-                    f"cell{n_sub}"
-                )
-            )
-            spaces.append(n_sub)
-        assigned = data.select(*sel)
-
-        def _tag(s: int):
-            # capture s by value; transform's lambda must stay 2-arg
-            return lambda x, i: F.struct(
-                F.lit(s).cast("int").alias("s"),
-                F.col(f"cell{s}").alias("cluster_id"),
-                i.alias("dim"),
-                x.alias("x"),
-            )
-
-        long = assigned.select(
-            F.explode(
-                F.flatten(
-                    F.array(*[F.transform(F.col(f"vs{s}"), _tag(s)) for s in spaces])
-                )
-            ).alias("e")
-        )
-        upd = (
-            long.groupBy("e.s", "e.cluster_id", "e.dim")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.round(F.col("e.x"), ITER_ROUND).cast(_DEC)).alias("sm"),
-            )
-            .select(
-                "s",
-                "cluster_id",
-                "dim",
-                F.round(F.col("sm").cast("double") / F.col("n"), ITER_ROUND).alias(
-                    "m"
-                ),
-            )
-            .collect()
-        )
-        new_books = [[list(c) for c in b] for b in books]
-        new_centers = [list(c) for c in centers]
-        for r in upd:
-            if r.s == n_sub:
-                new_centers[r.cluster_id][r.dim] = float(r.m)
-            else:
-                new_books[r.s][r.cluster_id][r.dim] = float(r.m)
-        books = new_books
-        centers = new_centers
-    return centers, books
+            *[_Space(codebook_k, pq_iterations, dist_round, s * sub, sub) for s in range(n_sub)],
+            _Space(num_cells, coarse_iterations, dist_round),
+        ],
+    )
+    return centers, [b for b, _ in books]
 
 
 def pq_codes(
@@ -2218,18 +2029,10 @@ def pq_codes(
     instead of re-scanning the source — one scan + one pin serve fit
     and encode (identical rows: the pin is exactly the
     notNull-filtered, cast projection the encode pass would make)."""
-    from safedata_pipeline_spark.partitioning import spread_small
+    from safedata_pipeline_spark.operators.clustering import _vectors
 
     if codebooks is None:
-        prepared = (
-            df.where(F.col(vec_col).isNotNull())
-            .select(
-                F.col(id_col).alias("id"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            )
-            .transform(spread_small)
-            .transform(pin_lazy)
-        )
+        prepared = _vectors(df, id_col, vec_col)
         codebooks = pq_fit(
             df, dim, n_sub, codebook_k, iterations, dist_round, id_col, vec_col,
             _prepared=prepared,
@@ -2276,17 +2079,9 @@ def pq_reconstruction_error(
     pinned (identical rows: the pin is exactly the notNull-filtered,
     cast projection) — one scan + one pin serve fit and measure.
     """
-    from safedata_pipeline_spark.partitioning import spread_small
+    from safedata_pipeline_spark.operators.clustering import _vectors
 
-    prepared = (
-        df.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .transform(spread_small)
-        .transform(pin_lazy)
-    )
+    prepared = _vectors(df, id_col, vec_col)
     codebooks = pq_fit(
         df, dim, n_sub, codebook_k, iterations, dist_round, id_col, vec_col,
         _prepared=prepared,
@@ -2348,20 +2143,12 @@ def ann_topk_pq_adc(
     """
     from pyspark.sql import Window
 
-    from safedata_pipeline_spark.partitioning import spread_small
+    from safedata_pipeline_spark.operators.clustering import _vectors
 
     # one pinned (id, v) frame serves the fit AND the encode pass
     # (identical rows: the pin is exactly the notNull-filtered, cast
     # projection the encode pass would make) — one scan + one pin
-    prepared = (
-        corpus.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .transform(spread_small)
-        .transform(pin_lazy)
-    )
+    prepared = _vectors(corpus, id_col, vec_col)
     codebooks = pq_fit(
         corpus, dim, n_sub, codebook_k, iterations, dist_round, id_col, vec_col,
         _prepared=prepared,
@@ -2442,23 +2229,14 @@ def ann_topk_ivf_pq(
 
     from safedata_pipeline_spark.operators.clustering import (
         _nearest_centroid_expr,
+        _vectors,
         probe_cells_expr,
     )
-
-    from safedata_pipeline_spark.partitioning import spread_small
 
     # ONE pinned (id, v) frame feeds BOTH fits AND the encode pass —
     # was two pins + two seed scans + a third parquet scan over the
     # same vectors. Lazy: the joint seed collect materializes it.
-    prepared = (
-        corpus.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .transform(spread_small)
-        .transform(pin_lazy)
-    )
+    prepared = _vectors(corpus, id_col, vec_col)
     # the coarse Lloyd recurrence and the n_sub PQ subspace recurrences
     # are independent, so they fit JOINTLY: ONE seed collect + ONE
     # update job per Lloyd round for all 9 spaces (guide §5 — the fits

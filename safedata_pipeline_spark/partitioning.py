@@ -1,4 +1,5 @@
-"""Partition-count hygiene helpers.
+"""Partition-count hygiene helpers, and the one range-partitioned
+prefix-sum primitive (``ranged_prefix``).
 
 ``spread_small`` exists for one plan shape: an operator is about to
 EXPLODE (shingles, char n-grams, band rows) and the input arrived from
@@ -23,6 +24,99 @@ purchase.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+
+def _shuffle_partitions(spark) -> int:
+    """Shuffle-partition count with a defensive fallback (ADVICE r12):
+    on platforms where ``spark.sql.shuffle.partitions`` holds a
+    non-numeric value (e.g. 'auto' under adaptive serverless runtimes)
+    the int() cast would raise before the job runs — fall back to the
+    cluster default parallelism instead."""
+    try:
+        return max(int(spark.conf.get("spark.sql.shuffle.partitions", "8")), 1)
+    except ValueError:
+        return max(int(spark.sparkContext.defaultParallelism), 1)
+
+
+def ranged_prefix(
+    df: DataFrame,
+    order_cols: list[str],
+    sum_cols: list[str],
+    key_cols: tuple[str, ...] | list[str] = (),
+) -> DataFrame:
+    """Exact per-key running sums in ``order_cols`` order with NO
+    single-task window — the scale form of
+    ``sum(c) OVER (PARTITION BY keys ORDER BY order ROWS BETWEEN
+    UNBOUNDED PRECEDING AND CURRENT ROW)``.
+
+    Phase 1: range-partition on (keys, order) and pin each row's
+    ``spark_partition_id`` (``localCheckpoint`` materializes the rows
+    WITH their partition ids, so every downstream job sees the same
+    placement). ``df`` is NOT persisted first: under adaptive execution
+    a cached input is built by a job of its own whose final stage is
+    never coalesced, while without it the boundary-sampling job and the
+    checkpoint share ``df``'s upstream shuffle stages and only its
+    narrow tail runs twice (measured on Spark 4.1 against a persisted
+    input: the privacy flow drops from 97 to 94 jobs and 686 to 590
+    tasks, and no registry query launches more jobs).
+
+    Phase 2: per-(key, pid) totals form an O(partitions × keys) frame;
+    a window over it gives each (key, pid) its prefix offset and each
+    key its total, broadcast back onto the pinned rows. The running
+    sum is a window partitioned by (key, pid): every task sorts only
+    its own contiguous range. Integer and DECIMAL sums are exact and
+    associative, so the result is bit-identical to the single-window
+    form (tests/test_partitioning.py pins it).
+
+    Output: every column of ``df`` plus, per sum column ``c``,
+    ``__cum_<c>`` (the inclusive running sum) and ``__tot_<c>`` (the
+    per-key total). The frame is ROWS, so summing a ``lit(1)`` column
+    gives ``row_number`` over (keys, order).
+    """
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from safedata_pipeline_spark.checkpoint import pin_eager
+
+    keys = list(key_cols)
+    rp = (
+        df.repartitionByRange(
+            _shuffle_partitions(df.sparkSession), *keys, *order_cols
+        )
+        .withColumn("__pid", F.spark_partition_id())
+        .transform(pin_eager)
+    )
+    tot = rp.groupBy(*keys, "__pid").agg(
+        *[F.sum(c).alias(f"__pt_{c}") for c in sum_cols]
+    )
+    w_prev = (
+        Window.partitionBy(*keys)
+        .orderBy("__pid")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    w_key = Window.partitionBy(*keys)
+    off = tot.select(
+        *keys,
+        "__pid",
+        *[
+            F.coalesce(F.sum(f"__pt_{c}").over(w_prev), F.lit(0)).alias(f"__off_{c}")
+            for c in sum_cols
+        ],
+        *[F.sum(f"__pt_{c}").over(w_key).alias(f"__tot_{c}") for c in sum_cols],
+    )
+    w_run = (
+        Window.partitionBy(*keys, "__pid")
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return rp.join(F.broadcast(off), [*keys, "__pid"]).select(
+        *df.columns,
+        *[
+            (F.sum(c).over(w_run) + F.col(f"__off_{c}")).alias(f"__cum_{c}")
+            for c in sum_cols
+        ],
+        *[f"__tot_{c}" for c in sum_cols],
+    )
 
 
 def spread_small(df: DataFrame, min_factor: int = 1) -> DataFrame:

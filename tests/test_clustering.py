@@ -64,3 +64,21 @@ def test_kmeans_rejects_bad_params(spark):
         CL.kmeans_fit(df, k=0)
     with pytest.raises(ValueError):
         CL.kmeans_fit(df.limit(2), k=3)
+
+
+def test_kmeans_embeddings_query_is_flat(spark, sf_dir):
+    # the driver hashes result cells: a list-typed centroid column is
+    # unhashable there, so the registry query emits one row per
+    # (cluster, dim) coordinate with atomic types only
+    import os
+    import sys
+
+    from pyspark.sql.types import ArrayType, BinaryType, MapType, StructType
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as entry
+
+    df = entry.queries()["kmeans_embeddings"](spark, sf_dir)
+    nested = (ArrayType, BinaryType, MapType, StructType)
+    assert not [f.name for f in df.schema.fields if isinstance(f.dataType, nested)]
+    assert df.columns == ["cluster_id", "n_assigned", "dim", "value"]

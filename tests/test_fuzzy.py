@@ -45,7 +45,7 @@ def test_sorted_neighborhood_pairs_nonnumeric_shuffle_conf():
     cluster default parallelism instead of raising ValueError.
     (Vanilla Spark rejects setting the conf to 'auto', so the helper
     is exercised with a stub session.)"""
-    from safedata_pipeline_spark.operators.fuzzy import _shuffle_partitions
+    from safedata_pipeline_spark.partitioning import _shuffle_partitions
 
     class _Conf:
         def __init__(self, v):

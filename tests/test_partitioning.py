@@ -1,10 +1,14 @@
 """spread_small gate behavior: raise-only repartition, job-free probe,
-structural (not textual) exchange detection — ADVICE r10."""
+structural (not textual) exchange detection — ADVICE r10. ranged_prefix
+against the single-window running sum it replaces."""
 
+import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from safedata_pipeline_spark.partitioning import (
     _has_shuffle_exchange,
+    ranged_prefix,
     spread_small,
 )
 
@@ -85,3 +89,73 @@ def test_spread_small_pinned_floors_post_shuffle_width(spark):
     )
     # values survive the pin + repartition intact
     assert out.count() == 2000
+
+
+def _prefix_case(spark, name):
+    """(df, order_cols, sum_cols, key_cols) for one ranged_prefix case;
+    (key, order) is unique per row, so the ROWS frame is deterministic."""
+    if name == "zero_rows":
+        df = spark.createDataFrame([], "x double, c int")
+        return df, ["x"], ["c"], ()
+    if name == "one_row":
+        return spark.createDataFrame([(1.5, 7)], "x double, c int"), ["x"], ["c"], ()
+    if name == "one_key_many_partitions":
+        df = spark.range(0, 400).select(
+            F.lit("a").alias("k"),
+            (F.col("id") * 0.37 - 50).alias("x"),
+            (F.col("id") % 7).cast("int").alias("c"),
+        )
+        # the key's values really do spread over >= 3 range partitions
+        spread = df.repartitionByRange(4, "k", "x").select(
+            F.spark_partition_id().alias("p")
+        ).distinct().count()
+        assert spread >= 3
+        return df, ["x"], ["c"], ("k",)
+    if name == "two_keys":
+        df = spark.range(0, 300).select(
+            (F.col("id") % 3).alias("k1"),
+            (F.col("id") % 2).cast("string").alias("k2"),
+            (-F.col("id")).alias("x"),
+            (F.col("id") % 5).alias("c"),
+        )
+        return df, ["x"], ["c"], ("k1", "k2")
+    if name == "decimal_sum":
+        df = spark.range(0, 250).select(
+            (F.col("id") % 4).alias("k"),
+            F.col("id").alias("x"),
+            (F.col("id") / 7).cast("decimal(38,6)").alias("w"),
+        )
+        return df, ["x"], ["w"], ("k",)
+    if name == "rank":
+        df = spark.range(0, 200).select(
+            (F.col("id") % 11).cast("double").alias("s"),
+            F.col("id").alias("i"),
+            F.lit(1).alias("one"),
+        )
+        return df, ["s", "i"], ["one"], ()
+    raise AssertionError(name)
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["zero_rows", "one_row", "one_key_many_partitions", "two_keys", "decimal_sum", "rank"],
+)
+def test_ranged_prefix_matches_single_window(spark, case):
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        df, order, sums, keys = _prefix_case(spark, case)
+        run = Window.partitionBy(*keys).orderBy(*order).rowsBetween(
+            Window.unboundedPreceding, 0
+        )
+        whole = Window.partitionBy(*keys)
+        ref = df.select(
+            *df.columns,
+            *[F.sum(c).over(run).alias(f"__cum_{c}") for c in sums],
+            *[F.sum(c).over(whole).alias(f"__tot_{c}") for c in sums],
+        )
+        got = ranged_prefix(df, order, sums, keys)
+        assert got.schema == ref.schema
+        assert sorted(got.collect()) == sorted(ref.collect())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)

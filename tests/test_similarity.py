@@ -1061,8 +1061,9 @@ def test_pq_fit_joint_matches_sequential_per_subspace(spark):
 def test_joint_coarse_pq_fit_matches_sequential(spark):
     # the ivf_pq joint fit (one seed collect + one update job per
     # Lloyd round for the coarse space AND every PQ subspace) must be
-    # bit-identical to the sequential kmeans_fit_centers + pq_fit
-    # chain it replaced — including ASYMMETRIC iteration budgets
+    # bit-identical to fitting every space ALONE — the coarse space
+    # and each sliced subspace as its own single-space
+    # kmeans_fit_centers — including ASYMMETRIC iteration budgets
     # (coarse 3, pq 2: the coarse space keeps iterating alone)
     from pyspark.sql import functions as F
 
@@ -1087,9 +1088,18 @@ def test_joint_coarse_pq_fit_matches_sequential(spark):
         df, k=num_cells, iterations=coarse_iters,
         id_col="vec_id", vec_col="embedding", dist_round=dr,
     )
-    seq_books = S.pq_fit(
-        df, dim=dim, n_sub=n_sub, codebook_k=codebook_k, iterations=pq_iters,
-    )
+    sub = dim // n_sub
+    v = F.col("embedding").cast("array<double>")
+    seq_books = [
+        kmeans_fit_centers(
+            df.where(F.col("embedding").isNotNull()).select(
+                "vec_id", F.slice(v, s * sub + 1, sub).alias("embedding")
+            ),
+            k=codebook_k, iterations=pq_iters,
+            id_col="vec_id", vec_col="embedding", dist_round=dr,
+        )[0]
+        for s in range(n_sub)
+    ]
     centers, books = _joint_coarse_pq_fit(
         prepared, num_cells, coarse_iters, dim, n_sub, codebook_k, pq_iters, dr
     )

@@ -3,8 +3,10 @@
 Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` counterpart on DuckDB over the same parquet fixtures,
 then compares row count, sorted column names, and cell values
-(rows sorted by all columns; exact for non-floats, exact-with-report
-for floats). Usage:
+(rows sorted by all columns on their raw values; exact for non-floats,
+exact-with-report for floats). Rows-only queries (no oracle SQL) are
+canonicalized the same way, so a result the driver cannot canonicalize
+fails here too. Usage:
 
     python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -26,9 +28,13 @@ from safedata_pipeline_spark.sources.tables import TABLES  # noqa: E402
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
+    """Canonical row order: columns by name, rows sorted on their RAW
+    values — the way the driver canonicalizes. A list/map cell is
+    unhashable, so the sort raises ``TypeError`` here exactly as it
+    does in the driver (an ``astype(str)`` sort key hid that)."""
     df = df.reindex(sorted(df.columns), axis=1)
     if len(df):
-        df = df.sort_values(by=list(df.columns), key=lambda s: s.astype(str)).reset_index(drop=True)
+        df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
     return df
 
 
@@ -91,6 +97,12 @@ def main() -> int:
             continue
         dt = time.time() - t0
         if name not in oracles:
+            try:
+                normalize(spd)
+            except Exception as e:
+                print(f"FAIL  {name}: canonicalize error: {type(e).__name__}: {e}")
+                n_fail += 1
+                continue
             print(f"rows-only {name}: rows={len(spd)} ({dt:.1f}s)")
             continue
         try:

@@ -14,6 +14,12 @@ The sum is one bench rep without the median loop, so
 ``build + analyze`` vs ``exec`` separates the driver-side fixed floor
 (guide §5/§7.3) from actual cluster work, query by query.
 
+Each query runs under its own Spark job group (``setJobGroup``), so the
+line also carries the host-independent ``jobs`` / ``stages`` / ``tasks``
+counters of everything it launched — eager fit jobs in ``build``
+included — read from Spark's status store by
+``perfbench.sparkstats.counters`` after the query finishes.
+
 Usage:
     python tools/floor_probe.py [--sf DIR] [--warm] [query ...]
 (no queries = the full registry). Prints one JSON line per query so a
@@ -30,6 +36,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
+from perfbench.sparkstats import counters  # noqa: E402
 from safedata_pipeline_spark.session import get_spark  # noqa: E402
 
 
@@ -77,9 +84,11 @@ def main() -> None:
     import gc
 
     totals = {"build": 0.0, "analyze": 0.0, "exec": 0.0}
-    for n in names:
+    work = {"jobs": 0, "stages": 0, "tasks": 0}
+    for i, n in enumerate(names):
         gc.collect()
-        spark.sparkContext.setJobDescription(f"floor:{n}")
+        group = f"floor:{i}:{n}"
+        spark.sparkContext.setJobGroup(group, group)
         t0 = time.time()
         df = qs[n](spark, sf_dir)
         t1 = time.time()
@@ -87,16 +96,22 @@ def main() -> None:
         t2 = time.time()
         df.write.format("noop").mode("overwrite").save()
         t3 = time.time()
-        spark.sparkContext.setJobDescription(None)
+        spark.sparkContext.setJobGroup(None, None)
+        c = counters(spark, [group])
         rec = {
             "q": n,
             "build": round(t1 - t0, 3),
             "analyze": round(t2 - t1, 3),
             "exec": round(t3 - t2, 3),
             "total": round(t3 - t0, 3),
+            "jobs": c.jobs,
+            "stages": c.stages,
+            "tasks": c.tasks,
         }
         for k in totals:
             totals[k] += rec[k]
+        for k in work:
+            work[k] += rec[k]
         print(json.dumps(rec), flush=True)
     print(
         json.dumps(
@@ -104,6 +119,7 @@ def main() -> None:
                 "q": "__TOTALS__",
                 **{k: round(v, 1) for k, v in totals.items()},
                 "total": round(sum(totals.values()), 1),
+                **work,
                 "n": len(names),
             }
         ),

@@ -437,7 +437,10 @@ def compute(spark, sf_dir: str) -> dict[str, float]:
 
     emb = load_table(spark, sf_dir, "embeddings")
     fit = qs["kmeans_embeddings"](spark, sf_dir).collect()
-    cents = [r["centroid"] for r in sorted(fit, key=lambda r: r["cluster_id"])]
+    k = 1 + max(r["cluster_id"] for r in fit)
+    cents = [[0.0] * (len(fit) // k) for _ in range(k)]
+    for r in fit:
+        cents[r["cluster_id"]][r["dim"]] = r["value"]
     assigned = CL.kmeans_assign(emb, cents).withColumnRenamed("cluster_id", "c")
     cent_df = spark.createDataFrame(
         [(i, c) for i, c in enumerate(cents)], "c int, cent array<double>"
