@@ -5,11 +5,16 @@ document dedup → near-dup clustering → canonical selection → sequence
 packing, composed from the individual operators so a user runs one
 object instead of wiring eight DataFrames.
 
-Execution shape: every step consumes the previous step's DataFrame
-lazily; the near-dup stage persists its pair list once (it feeds both
-the cluster resolution and the stats), and the final packed corpus is
-one plan from the surviving documents. Stats collected to the driver
-are O(steps) scalars, never rows.
+Execution shape: each row-dropping step is computed ONCE. ``_keep``
+pins the step's survivors lazily (``checkpoint.pin_lazy``) and its
+funnel ``count()`` is the job that fills the pin, so the next step —
+and any step that reads its input twice (a semi-join back, signatures
+plus doc ids) — reads the pinned rows instead of re-running every
+earlier step from the scan; the final packed corpus is one plan over
+the last pin. ``normalize`` cannot drop rows: it carries the previous
+count forward with no job and its map-only work folds into the next
+step's pin. Stats collected to the driver are O(steps) scalars, never
+rows.
 
 Scale posture inherits from the operators: quality filtering is a
 map-side CASE + one exact-or-approx quantile; dedup families avoid
@@ -23,6 +28,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
+from safedata_pipeline_spark.checkpoint import pin_lazy
 from safedata_pipeline_spark.operators import compression as CMP
 from safedata_pipeline_spark.operators import dedup as DD
 from safedata_pipeline_spark.operators import pack as PK
@@ -42,8 +48,15 @@ class CorpusPipeline:
         self.results: dict[str, Any] = {}
 
     def _keep(self, step: str, df: DataFrame) -> "CorpusPipeline":
-        self.df = df
-        self.funnel[step] = df.count()
+        """Make ``df`` the current corpus and record its funnel count.
+
+        The survivors are pinned lazily and the count is the action that
+        fills the pin: one job per step, after which later steps read
+        the pinned rows and never re-run this step's plan. Unless a
+        caller still holds it, the previous step's pin becomes
+        unreachable once this one is filled and is released on GC."""
+        self.df = df.transform(pin_lazy)
+        self.funnel[step] = self.df.count()
         return self
 
     # -- step -1: HTML → text extraction --------------------------------
@@ -92,13 +105,14 @@ class CorpusPipeline:
     ) -> "CorpusPipeline":
         """C4/CCNet-style canonicalization before any hashing — exact
         dedup on raw bytes misses case/whitespace variants. Row count
-        is unchanged; the funnel records the step for provenance."""
-        return self._keep(
-            "normalize",
-            TX.normalize_text(
-                self.df, self.text_col, lowercase, collapse_whitespace, strip_control
-            ),
+        is unchanged, so the previous count is carried forward into the
+        funnel with no job and no pin: the next row-dropping step's pin
+        absorbs this map-only rewrite."""
+        self.df = TX.normalize_text(
+            self.df, self.text_col, lowercase, collapse_whitespace, strip_control
         )
+        self.funnel["normalize"] = next(reversed(self.funnel.values()))
+        return self
 
     # -- step 1: quality filter ----------------------------------------
     def filter_quality(self, keep_fraction: float = 0.5) -> "CorpusPipeline":

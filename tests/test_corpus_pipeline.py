@@ -1,6 +1,7 @@
 """End-to-end corpus curation: filter → unit dedup → near-dup →
 pack, on the documents fixture."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from safedata_pipeline_spark.corpus_pipeline import CorpusPipeline
@@ -501,3 +502,60 @@ def test_filter_funnel_all_pass_and_validation(spark):
     assert all(r.survivors_after == 1 for r in rows)
     with pytest.raises(ValueError):
         CPL.filter_funnel(df, min_words=0)
+
+
+# funnel of the chain below on the sf0.001 documents table, recorded
+# before steps pinned their survivors: pinning must not move a count
+SF0001_CHAIN_FUNNEL = {
+    "input": 500,
+    "normalize": 500,
+    "quality": 300,
+    "substring_dedup": 290,
+    "near_dedup": 290,
+}
+
+
+ROW_DROPPING_CHAIN = (
+    ("quality", lambda cp: cp.filter_quality(0.6)),
+    ("substring_dedup", lambda cp: cp.dedup_substrings(k=8)),
+    ("near_dedup", lambda cp: cp.dedup_near(threshold=0.5)),
+)
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_corpus_pipeline_steps_read_pinned_survivors(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents")
+    cp = CorpusPipeline(docs)
+    # normalize cannot drop rows: it carries the count forward, no job
+    assert _jobs_in_group(spark, "corpus-pin:normalize", cp.normalize) == 0
+    for step, run in ROW_DROPPING_CHAIN:
+        # the group sees each step's count job, so the zero above is not vacuous
+        assert _jobs_in_group(spark, f"corpus-pin:{step}", lambda: run(cp)) >= 1
+        plan = cp.df._jdf.queryExecution().optimizedPlan().toString()
+        # the next step reads the pinned survivors, not the parquet scan
+        assert "Relation" not in plan, (step, plan)
+        assert "LogicalRDD" in plan, (step, plan)
+    packed = cp.pack(budget=64, buckets=8)
+    assert cp.funnel_report() == SF0001_CHAIN_FUNNEL
+    assert packed.count() == SF0001_CHAIN_FUNNEL["near_dedup"]
+
+
+@pytest.mark.parametrize("n", [0, 1])
+def test_corpus_pipeline_degenerate_input(spark, sf_dir, n):
+    docs = load_table(spark, sf_dir, "documents").limit(n)
+    cp = CorpusPipeline(docs)
+    cp.normalize()
+    for _, run in ROW_DROPPING_CHAIN:
+        run(cp)
+    packed = cp.pack(budget=64, buckets=8)
+    assert cp.funnel_report() == {k: n for k in SF0001_CHAIN_FUNNEL}
+    assert packed.count() == n
