@@ -1602,9 +1602,7 @@ def _q_incremental_percentiles(spark, sf):
     # mergeable percentile state (X124): fixed-grid histograms of two
     # disjoint batches merged, percentile finish over ≤100 state rows
     li = load_table(spark, sf, "lineitem")
-    lohi = li.agg(F.min("l_extendedprice"), F.max("l_extendedprice")).collect()[0]
-    lo, hi = float(lohi[0]), float(lohi[1])
-    width = (hi - lo) / 100.0 or 1.0
+    lo, width = DR.fit_grid(li, "l_extendedprice", 100) or DR.EMPTY_GRID
     a = INC.histogram_partials(
         li.where(F.col("l_orderkey") % 2 == 0), "l_extendedprice", lo, width, 100
     )

@@ -26,17 +26,22 @@ than one partition's values in one task. For 100 TB continuous data
 ``ks_statistic_binned`` (fixed-width bins, pure groupBy) bounds the
 window input to ≤``bins`` rows per column with error ≤ one bin width;
 ``distribution_drift(exact=False)`` routes every numeric column through
-that construction. χ² sums per-category contributions as
+that construction. The whole binned family (binned KS, PSI, JSD, the
+hourly timeline and its streaming twin, mergeable percentiles, ROC and
+calibration grids) fits its grid with ``fit_grid``, bins with
+``grid_bin`` and runs its cumulatives with ``bounded_cum_window`` — a
+plain window, allowed only because the table under it is bounded by
+``bins`` rows per key. χ² sums per-category contributions as
 DECIMAL(38,12) so the sum is order-independent (float sums are not
 associative; a shuffle could otherwise flip the last ulp between runs).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from safedata_pipeline_spark.checkpoint import pin_eager, pin_lazy
+from safedata_pipeline_spark.checkpoint import pin_eager
 from safedata_pipeline_spark.partitioning import ranged_prefix
 from pyspark.sql.types import NumericType
 
@@ -93,78 +98,108 @@ def _ks_stat() -> F.Column:
     )
 
 
-def _bounded_cum(
-    g: DataFrame, val_col: str, cols: list[str], span: int = 256
-) -> DataFrame:
-    """Parallel cumulative sums over a BOUNDED binned table (≤ bins
-    rows) with no unpartitioned window anywhere: rows split into
-    ``span``-wide blocks of the (integer) ``val_col``; per-block prefix
-    offsets come from a bounded range self-join of the block-total
-    table (≤ (bins/span)² pairs — tiny, broadcast), and the in-block
-    running sum is a window PARTITIONED by block. Integer math — bit
-    identical to the single-window form. Adds ``__cum_<col>`` columns.
+EMPTY_GRID = (0.0, 1.0)  # the grid of an all-NULL column: nothing lands in it
 
-    This is the expression-only sibling of
-    ``partitioning.ranged_prefix`` (which handles unbounded
-    distinct-value tables via pinned partition ids);
-    binned constructions are bounded by design, so the offsets can be
-    a join instead of a driver round-trip."""
-    gb = g.withColumn("__blk", F.floor(F.col(val_col) / F.lit(span)))
-    n = list(range(len(cols)))
-    bt = gb.groupBy("__blk").agg(*[F.sum(cols[i]).alias(f"__t{i}") for i in n])
-    bt2 = bt.select(
-        F.col("__blk").alias("__b2"), *[F.col(f"__t{i}") for i in n]
+
+def _grid(lo, hi, bins: int) -> tuple[float, float]:
+    lo, hi = float(lo), float(hi)
+    return lo, (hi - lo) / bins or 1.0
+
+
+def fit_grid(df: DataFrame, col: str, bins: int) -> tuple[float, float] | None:
+    """Fixed-width histogram grid of ``col`` → ``(lo, width)`` from one
+    min/max collect; a constant column gets width 1.0. ``None`` when the
+    column has no non-null value — callers that bin anyway take
+    ``EMPTY_GRID``, so their counts are zero rows and every statistic
+    over them finishes NULL."""
+    r = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
+    return None if r["lo"] is None else _grid(r["lo"], r["hi"], bins)
+
+
+def grid_bin(value: Column, lo, width, bins: int) -> Column:
+    """Bin id of ``value`` on a fixed-width grid: ``floor((value − lo) /
+    width)`` with the top edge clamped into bin ``bins − 1``. ``lo`` and
+    ``width`` are floats (a fitted grid) or Columns (a grid riding a
+    broadcast 1-row aggregate)."""
+    return F.least(F.floor((value - lo) / width), F.lit(bins - 1))
+
+
+def bounded_cum_window(order, *keys: str) -> WindowSpec:
+    """Running-sum frame over a table BOUNDED by a constant (≤ ``bins``
+    or ≤ ``max_points`` rows per key): a plain ordered window, one task
+    per key. Never use it over a data-sized table — that is what
+    ``partitioning.ranged_prefix`` is for."""
+    return (
+        Window.partitionBy(*keys)
+        .orderBy(order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    off = (
-        bt.select(F.col("__blk").alias("__b1"))
-        .join(F.broadcast(bt2), F.col("__b2") < F.col("__b1"), "left")
-        .groupBy("__b1")
-        .agg(*[F.coalesce(F.sum(f"__t{i}"), F.lit(0)).alias(f"__o{i}") for i in n])
+
+
+def binned_percentiles(
+    hist: DataFrame, lo: float, width: float, probs: tuple, keys: tuple = ()
+) -> DataFrame:
+    """Percentiles from fixed-grid bin counts ``(*keys, bin, n)`` → one
+    row per key ``(*keys, n, p25, ...)``: linear interpolation within
+    the first bin whose cumulative count reaches p·n (uniform-within-bin
+    — error ≤ one bin width). All-integer cumulative math over ≤bins
+    rows per key, so equal counts give bit-equal percentiles however
+    they were accumulated. Empty counts give one row of NULLs without
+    keys, zero rows with them."""
+    cum = hist.select(
+        *keys,
+        "bin",
+        "n",
+        F.sum("n").over(bounded_cum_window("bin", *keys)).alias("cn"),
+        F.sum("n").over(Window.partitionBy(*keys)).alias("tot"),
     )
-    w_in = Window.partitionBy("__blk").orderBy(val_col)
-    out = gb.join(F.broadcast(off), F.col("__blk") == F.col("__b1"))
-    for i, c in enumerate(cols):
-        out = out.withColumn(f"__cum_{c}", F.sum(c).over(w_in) + F.col(f"__o{i}"))
-    return out.drop("__blk", "__b1", *[f"__o{i}" for i in n])
+    names = [f"p{int(round(p * 100)):02d}" for p in probs]
+    aggs = [F.max("tot").cast("bigint").alias("n")]
+    for p, name in zip(probs, names):
+        # first qualifying bin: min over (bin, cum, n) among hits
+        hit = F.col("cn") >= F.lit(float(p)) * F.col("tot")
+        aggs.append(F.min(F.when(hit, F.struct("bin", "cn", "n"))).alias(name))
+    outs = [*keys, "n"]
+    for p, name in zip(probs, names):
+        pk = F.col(name)
+        frac = (F.lit(float(p)) * F.col("n") - (pk["cn"] - pk["n"])) / pk["n"]
+        frac = F.least(F.greatest(frac, F.lit(0.0)), F.lit(1.0))
+        val = F.lit(lo) + (pk["bin"].cast("double") + frac) * F.lit(width)
+        outs.append(F.round(val, ROUND_N).alias(name))
+    return cum.groupBy(*keys).agg(*aggs).select(*outs)
+
+
+def _binned_sides(df_a: DataFrame, df_b: DataFrame, col: str, bins: int) -> DataFrame:
+    """Per-bin side counts ``(b, ca, cb)`` of ``col`` on one grid fit
+    over both sides, each row carrying the side totals ``(na, nb)`` —
+    a whole-table window, as the table is ≤``bins`` rows. Integer
+    counts; both sides empty → zero rows."""
+    u = _tagged_union(df_a, df_b, col)
+    lo, width = fit_grid(u, "v", bins) or EMPTY_GRID
+    g = u.groupBy(grid_bin(F.col("v"), lo, width, bins).alias("b")).agg(
+        F.sum("ka").alias("ca"), F.sum("kb").alias("cb")
+    )
+    whole = Window.partitionBy()
+    return g.select(
+        "*", F.sum("ca").over(whole).alias("na"), F.sum("cb").over(whole).alias("nb")
+    )
 
 
 def ks_statistic_binned(df_a: DataFrame, df_b: DataFrame, col: str, bins: int = 10000) -> DataFrame:
     """100 TB path: KS over fixed-width bins — one groupBy (map-side
-    combinable) + a window over ≤``bins`` rows; error ≤ max bin width of
-    the true ECDF step. No global sort of the data."""
-    lohi = (
-        _tagged_union(df_a, df_b, col)
-        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-        .collect()[0]
-    )
-    if lohi["lo"] is None:
-        # both inputs empty/all-null: NULL statistic, like ks_statistic
-        # and the SQL twin (float(None) would crash at plan build)
-        return df_a.sparkSession.range(1).select(
-            F.lit(None).cast("double").alias("ks_stat")
-        )
-    lo, hi = float(lohi["lo"]), float(lohi["hi"])
-    width = (hi - lo) / bins or 1.0
-    u = _tagged_union(df_a, df_b, col).withColumn(
-        "v", F.least(F.floor((F.col("v") - F.lit(lo)) / F.lit(width)), F.lit(bins - 1))
-    )
-    g = u.groupBy("v").agg(F.sum("ka").alias("ka"), F.sum("kb").alias("kb"))
-    # side totals as a broadcast 1-row aggregate instead of an
-    # unpartitioned total window, and the cumulative via _bounded_cum's
-    # block-partitioned windows — no WindowExec anywhere in this plan
-    # runs unpartitioned (the ≤bins-row input parallelizes per block).
-    tot = g.agg(F.sum("ka").alias("na"), F.sum("kb").alias("nb"))
-    c = (
-        _bounded_cum(g, "v", ["ka", "kb"])
-        .crossJoin(F.broadcast(tot))
+    combinable) + a running sum over ≤``bins`` rows; error ≤ max bin
+    width of the true ECDF step. No global sort of the data."""
+    w = bounded_cum_window("b")
+    return (
+        _binned_sides(df_a, df_b, col, bins)
         .select(
-            F.col("__cum_ka").alias("ca"),
-            F.col("__cum_kb").alias("cb"),
+            F.sum("ca").over(w).alias("ca"),
+            F.sum("cb").over(w).alias("cb"),
             "na",
             "nb",
         )
+        .agg(_ks_stat().alias("ks_stat"))
     )
-    return c.agg(_ks_stat().alias("ks_stat"))
 
 
 def chi2_categorical(df_a: DataFrame, df_b: DataFrame, col: str, na_label: str = "NA") -> DataFrame:
@@ -281,7 +316,7 @@ def distribution_drift(
                 .collect()
             )
             brows = [
-                (r["column"], float(r["lo"]), ((float(r["hi"]) - float(r["lo"])) / bins) or 1.0)
+                (r["column"], *_grid(r["lo"], r["hi"], bins))
                 for r in lohi
                 if r["lo"] is not None
             ]
@@ -290,10 +325,9 @@ def distribution_drift(
             )
             u = u.join(F.broadcast(bounds), "column").select(
                 "column",
-                F.least(
-                    F.floor((F.col("vnum") - F.col("lo")) / F.col("width")),
-                    F.lit(bins - 1),
-                ).cast("double").alias("vnum"),
+                grid_bin(F.col("vnum"), F.col("lo"), F.col("width"), bins)
+                .cast("double")
+                .alias("vnum"),
                 "ka",
                 "kb",
             )
@@ -355,25 +389,9 @@ def psi_drift(
     (the standard PSI smoothing). All counts integer until the final
     expression; NULL when either side is empty.
     """
-    lohi = (
-        _tagged_union(df_a, df_b, col)
-        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-        .collect()[0]
-    )
-    if lohi["lo"] is None:
-        return df_a.sparkSession.range(1).select(F.lit(None).cast("double").alias("psi"))
-    lo, hi = float(lohi["lo"]), float(lohi["hi"])
-    width = (hi - lo) / bins or 1.0
-    u = _tagged_union(df_a, df_b, col).withColumn(
-        "b", F.least(F.floor((F.col("v") - F.lit(lo)) / F.lit(width)), F.lit(bins - 1))
-    )
-    g = u.groupBy("b").agg(F.sum("ka").alias("ca"), F.sum("kb").alias("cb"))
     # try_divide: a fully-empty side has total 0 — the guard below
-    # yields NULL psi for that case, but ANSI mode would raise first.
-    # Totals come from a broadcast 1-row aggregate, not a total window
-    # (one WindowExec + sort fewer; integer sums, so hashes unchanged).
-    tot = g.agg(F.sum("ca").alias("na"), F.sum("cb").alias("nb"))
-    p = g.crossJoin(F.broadcast(tot)).select(
+    # yields NULL psi for that case, but ANSI mode would raise first
+    p = _binned_sides(df_a, df_b, col, bins).select(
         F.greatest(F.try_divide(F.col("ca"), F.col("na")), F.lit(eps)).alias("pa"),
         F.greatest(F.try_divide(F.col("cb"), F.col("nb")), F.lit(eps)).alias("pb"),
         "na",
@@ -406,22 +424,7 @@ def jsd_drift(
 
     Same binned construction as PSI; per-bin KL terms round@10 →
     DECIMAL-sum. NULL when either side is empty."""
-    lohi = (
-        _tagged_union(df_a, df_b, col)
-        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-        .collect()[0]
-    )
-    if lohi["lo"] is None:
-        return df_a.sparkSession.range(1).select(F.lit(None).cast("double").alias("jsd"))
-    lo, hi = float(lohi["lo"]), float(lohi["hi"])
-    width = (hi - lo) / bins or 1.0
-    u = _tagged_union(df_a, df_b, col).withColumn(
-        "b", F.least(F.floor((F.col("v") - F.lit(lo)) / F.lit(width)), F.lit(bins - 1))
-    )
-    g = u.groupBy("b").agg(F.sum("ka").alias("ca"), F.sum("kb").alias("cb"))
-    # broadcast 1-row totals instead of a total window (see psi_drift)
-    tot = g.agg(F.sum("ca").alias("na"), F.sum("cb").alias("nb"))
-    p = g.crossJoin(F.broadcast(tot)).select(
+    p = _binned_sides(df_a, df_b, col, bins).select(
         F.coalesce(F.try_divide(F.col("ca"), F.col("na")), F.lit(0.0)).alias("pa"),
         F.coalesce(F.try_divide(F.col("cb"), F.col("nb")), F.lit(0.0)).alias("pb"),
         "na",
@@ -451,68 +454,68 @@ def drift_timeline(
     ks_stat)`` with ks = max |ECDF_hour − ECDF_global| over fixed-width
     bins.
 
-    Shape: one pass bins every row (global lo/hi from a tiny agg);
-    per-(hour, bin) counts and per-bin global counts come from the
-    same grouped table; each hour's cumulative runs in a window
-    partitioned by hour over ≤``bins`` rows. Everything is integer
-    until the final division — engine-exact.
+    Shape: one pass bins every row (global grid from ``fit_grid``) into
+    per-(hour, bin) counts; the grid of hours × occupied bins carries
+    each bin's global count, so the global CDF is a running sum in the
+    same per-hour window as the hour's own ECDF, and ``hour_ks`` — the
+    streaming monitor's finish — takes the max gap. Everything is
+    integer until the final division — engine-exact.
     """
-    lohi = df.agg(
-        F.min(val_col).alias("lo"), F.max(val_col).alias("hi")
-    ).collect()[0]
-    if lohi["lo"] is None:
-        return df.sparkSession.createDataFrame(
-            [], "hour_start timestamp_ntz, n_rows bigint, ks_stat double"
-        )
-    lo, hi = float(lohi["lo"]), float(lohi["hi"])
-    width = (hi - lo) / bins or 1.0
-    binned = df.where(F.col(val_col).isNotNull()).select(
-        F.date_trunc("hour", F.col(ts_col)).cast("timestamp_ntz").alias("hour_start"),
-        F.least(
-            F.floor((F.col(val_col) - F.lit(lo)) / F.lit(width)), F.lit(bins - 1)
-        ).alias("b"),
-    )
-    # the per-(hour, bin) count table feeds THREE branches (global bin
+    lo, width = fit_grid(df, val_col, bins) or EMPTY_GRID
+    # the per-(hour, bin) count table feeds three branches (global bin
     # sums, per-hour totals, the grid join) — materialize it once
     # (bounded at hours × bins rows, dashboard-sized) so the final
     # plan reads the events data exactly once instead of per branch
     g = (
-        binned.groupBy("hour_start", "b")
+        df.where(F.col(val_col).isNotNull())
+        .groupBy(
+            F.date_trunc("hour", F.col(ts_col)).cast("timestamp_ntz").alias("hour_start"),
+            grid_bin(F.col(val_col), lo, width, bins).alias("b"),
+        )
         .agg(F.count(F.lit(1)).alias("c"))
         .transform(pin_eager)
     )
-    # explicit hour × global-bin grid: an hour MISSING a bin still
-    # advances the global cumulative there, so the grid (bounded at
-    # hours × bins rows — both dashboard-sized) left-joins the hour
-    # counts with 0-fill rather than skipping absent bins
     gb = g.groupBy("b").agg(F.sum("c").alias("cg"))
-    hours = g.groupBy("hour_start").agg(F.sum("c").alias("nh"))
-    grid = hours.crossJoin(F.broadcast(gb))
-    j = grid.join(g, on=["hour_start", "b"], how="left").select(
-        "hour_start", "b", "nh", "cg", F.coalesce("c", F.lit(0)).alias("c")
-    )
-    w_cum_h = Window.partitionBy("hour_start").orderBy("b")
-    w_h = Window.partitionBy("hour_start")
     # the global total is Σ cg within any one hour's grid rows — no
     # extra scan of df for a number the grid already contains
-    cum = j.select(
+    cum_cg = F.sum("cg").over(bounded_cum_window("b", "hour_start"))
+    total = F.sum("cg").over(Window.partitionBy("hour_start"))
+    return hour_ks(hour_grid(g, gb), cum_cg / total)
+
+
+def hour_grid(counts: DataFrame, ref: DataFrame) -> DataFrame:
+    """Hours × reference bins, 0-filled from the ``(hour_start, b, c)``
+    count table → ``(hour_start, nh, b, <ref columns>, c)``. An hour
+    missing a bin still gets a row there, so its cumulative stays in
+    step with the reference; the grid is bounded at hours × bins rows
+    (reference broadcast)."""
+    hours = counts.groupBy("hour_start").agg(F.sum("c").alias("nh"))
+    grid = hours.crossJoin(F.broadcast(ref))
+    # rename the right side's keys: grid derives from counts, and a
+    # raw self-join on shared names trips conflicting-reference
+    # resolution when counts is a sink-table view
+    c2 = counts.withColumnRenamed("hour_start", "__h").withColumnRenamed("b", "__b")
+    return grid.join(
+        c2,
+        on=(F.col("hour_start") == F.col("__h")) & (F.col("b") == F.col("__b")),
+        how="left",
+    ).select(*grid.columns, F.coalesce("c", F.lit(0)).alias("c"))
+
+
+def hour_ks(grid: DataFrame, ref_cdf: Column) -> DataFrame:
+    """Per-hour KS over an ``hour_grid`` → ``(hour_start, n_rows,
+    ks_stat)``: each hour's ECDF is a running sum over its ≤bins grid
+    rows, compared with ``ref_cdf`` — the reference cumulative fraction
+    at the same bin, a column of the reference or a window over it."""
+    cum = grid.select(
         "hour_start",
         "nh",
-        F.sum("c").over(w_cum_h).alias("ch"),
-        F.sum("cg").over(w_cum_h).alias("cgc"),
-        F.sum("cg").over(w_h).alias("total"),
+        ref_cdf.alias("ref_cdf"),
+        F.sum("c").over(bounded_cum_window("b", "hour_start")).alias("ch"),
     )
-    return (
-        cum.groupBy("hour_start")
-        .agg(
-            F.max("nh").cast("bigint").alias("n_rows"),
-            F.round(
-                F.max(
-                    F.abs(
-                        F.col("ch") / F.col("nh") - F.col("cgc") / F.col("total")
-                    )
-                ),
-                ROUND_N,
-            ).alias("ks_stat"),
-        )
+    return cum.groupBy("hour_start").agg(
+        F.max("nh").cast("bigint").alias("n_rows"),
+        F.round(
+            F.max(F.abs(F.col("ch") / F.col("nh") - F.col("ref_cdf"))), ROUND_N
+        ).alias("ks_stat"),
     )

@@ -39,6 +39,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from safedata_pipeline_spark.operators.drift import binned_percentiles, grid_bin
+
 ROUND_N = 6
 _DEC = "decimal(38,6)"
 
@@ -145,13 +147,8 @@ def histogram_partials(
     (bin, n) — at most ``bins`` rows of state per column."""
     if width <= 0 or bins < 1:
         raise ValueError("need width > 0 and bins >= 1")
-    b = F.least(
-        F.greatest(
-            F.floor((F.col(col).cast("double") - F.lit(lo)) / F.lit(width)),
-            F.lit(0),
-        ),
-        F.lit(bins - 1),
-    )
+    # clamping the value up to lo puts the open low tail in bin 0
+    b = grid_bin(F.greatest(F.col(col).cast("double"), F.lit(lo)), lo, width, bins)
     return (
         df.where(F.col(col).isNotNull())
         .groupBy(b.cast("bigint").alias("bin"))
@@ -171,39 +168,11 @@ def merge_histograms(*parts: DataFrame) -> DataFrame:
 def percentiles_from_histogram(
     hist: DataFrame, lo: float, width: float, probs: tuple = (0.25, 0.5, 0.75)
 ) -> DataFrame:
-    """Percentile estimates from the histogram state (1 output row):
-    linear interpolation within the first bin whose cumulative count
-    reaches p·n — error ≤ one bin width, deterministic (all-integer
-    cumulative math), so incremental == from-scratch exactly. The
-    cumulative window runs over ≤bins rows of state, never data."""
-    from pyspark.sql import Window
-
-    # total via a broadcast 1-row aggregate (one WindowExec fewer);
-    # the cumulative via drift._bounded_cum — block-partitioned
-    # windows over the ≤bins STATE rows, nothing unpartitioned
-    from safedata_pipeline_spark.operators.drift import _bounded_cum
-
-    tot = hist.agg(F.sum("n").alias("tot"))
-    cum = (
-        _bounded_cum(hist, "bin", ["n"])
-        .crossJoin(F.broadcast(tot))
-        .select("bin", "n", F.col("__cum_n").alias("cn"), "tot")
-    )
-    aggs = [F.max("tot").cast("bigint").alias("n")]
-    for p in probs:
-        target = F.lit(float(p)) * F.col("tot")
-        pick = F.min(
-            F.when(F.col("cn") >= target, F.struct(F.col("bin"), F.col("cn"), F.col("n")))
-        ).alias(f"__pk{int(round(p * 100)):02d}")
-        aggs.append(pick)
-    g = cum.agg(*aggs)
-    outs = [F.col("n")]
-    for p in probs:
-        name = f"p{int(round(p * 100)):02d}"
-        pk = F.col(f"__pk{name[1:]}")
-        frac = (F.lit(float(p)) * F.col("n") - (pk["cn"] - pk["n"])) / pk["n"]
-        frac = F.least(F.greatest(frac, F.lit(0.0)), F.lit(1.0))
-        outs.append(
-            F.round(F.lit(lo) + (pk["bin"].cast("double") + frac) * F.lit(width), ROUND_N).alias(name)
-        )
-    return g.select(*outs)
+    """Percentile estimates from the histogram state (1 output row
+    ``(n, p25, p50, p75)``): ``drift.binned_percentiles`` — linear
+    interpolation within the first bin whose cumulative count reaches
+    p·n, error ≤ one bin width, deterministic (all-integer cumulative
+    math), so incremental == from-scratch exactly. The running sum is a
+    plain ordered window over the ≤bins STATE rows, never data; empty
+    state gives NULL ``n`` and percentiles."""
+    return binned_percentiles(hist, lo, width, probs)

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from safedata_pipeline_spark.checkpoint import pin_lazy
+from safedata_pipeline_spark.operators.drift import bounded_cum_window, grid_bin
 from safedata_pipeline_spark.partitioning import ranged_prefix
 from pyspark.sql.types import NumericType
 
@@ -161,6 +162,17 @@ def binary_auc(df: DataFrame, score_col: str, label: "F.Column") -> DataFrame:
     )
 
 
+def _score_grid(e: DataFrame, bins: int) -> DataFrame:
+    """1-row ``(lo, w)`` fixed-width grid over the score ``s`` — the
+    ``drift.fit_grid`` rule as an aggregate, so the grid rides a
+    broadcast instead of a driver collect."""
+    span = F.max("s") - F.min("s")
+    return e.agg(
+        F.min("s").alias("lo"),
+        F.when(span == 0, F.lit(1.0)).otherwise(span / F.lit(float(bins))).alias("w"),
+    )
+
+
 def calibration_bins(
     df: DataFrame, score_col: str, label: "F.Column", bins: int = 10
 ) -> DataFrame:
@@ -174,13 +186,8 @@ def calibration_bins(
     The top edge clamps into the last bin; NULL scores/labels drop."""
     e = df.select(F.col(score_col).cast("double").alias("s"), label.cast("int").alias("y"))
     e = e.where(F.col("s").isNotNull() & F.col("y").isNotNull())
-    r = e.agg(
-        F.min("s").alias("lo"),
-        F.when(F.max("s") - F.min("s") == 0, F.lit(1.0))
-        .otherwise((F.max("s") - F.min("s")) / F.lit(float(bins)))
-        .alias("w"),
-    )
-    b = F.least(F.floor((F.col("s") - F.col("lo")) / F.col("w")), F.lit(bins - 1))
+    r = _score_grid(e, bins)
+    b = grid_bin(F.col("s"), F.col("lo"), F.col("w"), bins)
     return (
         e.crossJoin(F.broadcast(r))
         .groupBy(b.cast("bigint").alias("bin"))
@@ -254,18 +261,14 @@ def roc_points(
     cardinality.
 
     Aggregate-first: one groupBy(grid cell) over the data, then the
-    ≥-threshold cumulatives run DESCENDING over the ≤max_points cell
-    table via the bounded-window machinery (no data sort). Integer
+    ≥-threshold cumulatives and the P/N totals are plain windows over
+    the ≤max_points cell table (running DESCENDING by cell) — bounded
+    by ``max_points``, never by the data, so no data sort. Integer
     counts → engine-exact rates."""
     e = df.select(F.col(score_col).cast("double").alias("s"), label.cast("int").alias("y"))
     e = e.where(F.col("s").isNotNull() & F.col("y").isNotNull())
-    r = e.agg(
-        F.min("s").alias("lo"),
-        F.when(F.max("s") - F.min("s") == 0, F.lit(1.0))
-        .otherwise((F.max("s") - F.min("s")) / F.lit(float(max_points)))
-        .alias("w"),
-    )
-    b = F.least(F.floor((F.col("s") - F.col("lo")) / F.col("w")), F.lit(max_points - 1))
+    r = _score_grid(e, max_points)
+    b = grid_bin(F.col("s"), F.col("lo"), F.col("w"), max_points)
     g = (
         e.crossJoin(F.broadcast(r))
         .groupBy(b.cast("bigint").alias("bin"))
@@ -275,21 +278,22 @@ def roc_points(
             F.sum(1 - F.col("y")).alias("neg"),
         )
     )
-    # ≥ threshold ⇒ cumulate from the TOP: flip the bin sign and reuse
-    # the ascending bounded cumulative over the ≤max_points state rows
-    from safedata_pipeline_spark.operators.drift import _bounded_cum
-
-    flipped = g.select((-F.col("bin")).alias("rb"), "threshold", "pos", "neg")
-    c = _bounded_cum(flipped, "rb", ["pos", "neg"])
-    tot = g.agg(F.sum("pos").alias("P"), F.sum("neg").alias("N"))
-    return (
-        c.crossJoin(F.broadcast(tot))
-        .select(
-            F.round("threshold", 6).alias("threshold"),
-            (F.col("__cum_pos") + F.col("__cum_neg")).cast("bigint").alias("n_ge"),
-            F.round(F.try_divide(F.col("__cum_pos"), F.col("P")), 6).alias("tpr"),
-            F.round(F.try_divide(F.col("__cum_neg"), F.col("N")), 6).alias("fpr"),
-        )
+    # ≥ threshold ⇒ cumulate from the TOP: running sums DESCENDING by
+    # bin; they and the totals are windows over the ≤max_points cells
+    w = bounded_cum_window(F.col("bin").desc())
+    whole = Window.partitionBy()
+    c = g.select(
+        "threshold",
+        F.sum("pos").over(w).alias("cpos"),
+        F.sum("neg").over(w).alias("cneg"),
+        F.sum("pos").over(whole).alias("P"),
+        F.sum("neg").over(whole).alias("N"),
+    )
+    return c.select(
+        F.round("threshold", 6).alias("threshold"),
+        (F.col("cpos") + F.col("cneg")).cast("bigint").alias("n_ge"),
+        F.round(F.try_divide(F.col("cpos"), F.col("P")), 6).alias("tpr"),
+        F.round(F.try_divide(F.col("cneg"), F.col("N")), 6).alias("fpr"),
     )
 
 

@@ -14,50 +14,51 @@ sink table is dashboard-sized.
 
 Equivalence to the batch operator: when the reference is fit on the
 same data the stream consumed, ``finish_timeline`` over the drained
-counts reproduces ``drift_timeline``'s rows exactly (all-integer
-cumulative arithmetic, identical double divisions) — that equality is
-the test.
+counts reproduces ``drift_timeline``'s rows exactly (both finish with
+``operators.drift.hour_ks``: all-integer cumulative arithmetic,
+identical double divisions) — that equality is the test.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-ROUND_N = 6
+from safedata_pipeline_spark.operators.drift import (
+    EMPTY_GRID,
+    ROUND_N,
+    binned_percentiles,
+    fit_grid,
+    grid_bin,
+    hour_grid,
+    hour_ks,
+)
 
 
 def fit_reference(
     df: DataFrame, val_col: str = "value", bins: int = 100
 ) -> dict:
     """Fit the reference distribution of ``val_col``: global lo/width
-    plus the cumulative fraction at each OCCUPIED bin — O(bins) driver
-    rows, the broadcastable fit parameters a monitoring job pins at
-    deploy time. Returns {"lo", "width", "bins", "cdf": [(bin, cum_frac)]}.
+    plus the cumulative fraction and share of each OCCUPIED bin —
+    O(bins) driver rows, the broadcastable fit parameters a monitoring
+    job pins at deploy time. Returns {"lo", "width", "bins",
+    "cdf": [(bin, cum_frac)], "pdf": [(bin, frac)]}; an all-NULL
+    column fits ``EMPTY_GRID`` with empty ``cdf``/``pdf``.
     """
-    lohi = df.agg(F.min(val_col).alias("lo"), F.max(val_col).alias("hi")).collect()[0]
-    if lohi["lo"] is None:
-        return {"lo": 0.0, "width": 1.0, "bins": bins, "cdf": []}
-    lo, hi = float(lohi["lo"]), float(lohi["hi"])
-    width = (hi - lo) / bins or 1.0
+    lo, width = fit_grid(df, val_col, bins) or EMPTY_GRID
     g = (
         df.where(F.col(val_col).isNotNull())
-        .select(
-            F.least(
-                F.floor((F.col(val_col) - F.lit(lo)) / F.lit(width)), F.lit(bins - 1)
-            ).alias("b")
-        )
-        .groupBy("b")
+        .groupBy(grid_bin(F.col(val_col), lo, width, bins).alias("b"))
         .agg(F.count(F.lit(1)).alias("c"))
         .collect()
     )
-    counts = sorted((r["b"], r["c"]) for r in g)
+    counts = sorted((int(r["b"]), r["c"]) for r in g)
     total = sum(c for _, c in counts)
     cdf, run = [], 0
     for b, c in counts:
         run += c
-        cdf.append((int(b), run / total))
-    pdf = [(int(b), c / total) for b, c in counts]
+        cdf.append((b, run / total))
+    pdf = [(b, c / total) for b, c in counts]
     return {"lo": lo, "width": width, "bins": bins, "cdf": cdf, "pdf": pdf}
 
 
@@ -73,12 +74,12 @@ def hourly_bin_counts(
     streaming job maintains (groupBy time-window + bin, watermark-
     evictable). Identical expression runs on a batch frame; the
     stream/batch pair is the correctness check."""
-    b = F.least(
-        F.floor((F.col(val_col) - F.lit(lo)) / F.lit(width)), F.lit(bins - 1)
-    )
     return (
         events.where(F.col(val_col).isNotNull())
-        .groupBy(F.window(ts_col, "1 hour").alias("w"), b.alias("b"))
+        .groupBy(
+            F.window(ts_col, "1 hour").alias("w"),
+            grid_bin(F.col(val_col), lo, width, bins).alias("b"),
+        )
         .agg(F.count(F.lit(1)).alias("c"))
         .select(
             F.col("w.start").cast("timestamp_ntz").alias("hour_start"), "b", "c"
@@ -86,46 +87,21 @@ def hourly_bin_counts(
     )
 
 
+def _ref_frame(spark: SparkSession, pairs: list, name: str) -> DataFrame:
+    return spark.createDataFrame(pairs, f"b bigint, {name} double")
+
+
 def finish_timeline(counts: DataFrame, ref: dict) -> DataFrame:
     """Per-hour KS against the fixed reference CDF, from the (hour,
     bin, c) state table → ``(hour_start, n_rows, ks_stat)`` — the same
-    output contract as the batch ``drift_timeline``.
-
-    The grid is hours × occupied-reference-bins (both dashboard-sized,
-    reference broadcast); each hour's ECDF is a cumulative window over
-    ≤bins rows, compared against the reference cumulative fraction at
-    the same bin. All counts integer until the final division.
+    output contract as the batch ``drift_timeline``, and the same
+    finish (``operators.drift.hour_ks``): hours × occupied reference
+    bins, each hour's ECDF a running sum over ≤bins rows compared with
+    the reference cumulative fraction at the same bin. All counts
+    integer until the final division.
     """
-    spark = counts.sparkSession
-    refdf = spark.createDataFrame(
-        [(b, f) for b, f in ref["cdf"]], "b bigint, ref_cdf double"
-    )
-    hours = counts.groupBy("hour_start").agg(F.sum("c").alias("nh"))
-    grid = hours.crossJoin(F.broadcast(refdf))
-    # rename the right side's keys: grid derives from counts, and a
-    # raw self-join on shared names trips conflicting-reference
-    # resolution when counts is a sink-table view
-    c2 = counts.withColumnRenamed("hour_start", "__h").withColumnRenamed("b", "__b")
-    j = grid.join(
-        c2,
-        on=(F.col("hour_start") == F.col("__h")) & (F.col("b") == F.col("__b")),
-        how="left",
-    ).select(
-        "hour_start", "b", "nh", "ref_cdf", F.coalesce("c", F.lit(0)).alias("c")
-    )
-    w_cum_h = Window.partitionBy("hour_start").orderBy("b")
-    cum = j.select(
-        "hour_start",
-        "nh",
-        "ref_cdf",
-        F.sum("c").over(w_cum_h).alias("ch"),
-    )
-    return cum.groupBy("hour_start").agg(
-        F.max("nh").cast("bigint").alias("n_rows"),
-        F.round(
-            F.max(F.abs(F.col("ch") / F.col("nh") - F.col("ref_cdf"))), ROUND_N
-        ).alias("ks_stat"),
-    )
+    refdf = _ref_frame(counts.sparkSession, ref["cdf"], "ref_cdf")
+    return hour_ks(hour_grid(counts, refdf), F.col("ref_cdf"))
 
 
 def finish_timeline_psi(counts: DataFrame, ref: dict, eps: float = 1e-6) -> DataFrame:
@@ -140,20 +116,7 @@ def finish_timeline_psi(counts: DataFrame, ref: dict, eps: float = 1e-6) -> Data
     round@10 → DECIMAL-sum so the ln-bearing float total is order-
     and engine-independent.
     """
-    spark = counts.sparkSession
-    refdf = spark.createDataFrame(
-        [(b, p) for b, p in ref["pdf"]], "b bigint, ref_p double"
-    )
-    hours = counts.groupBy("hour_start").agg(F.sum("c").alias("nh"))
-    grid = hours.crossJoin(F.broadcast(refdf))
-    c2 = counts.withColumnRenamed("hour_start", "__h").withColumnRenamed("b", "__b")
-    j = grid.join(
-        c2,
-        on=(F.col("hour_start") == F.col("__h")) & (F.col("b") == F.col("__b")),
-        how="left",
-    ).select(
-        "hour_start", "nh", "ref_p", F.coalesce("c", F.lit(0)).alias("c")
-    )
+    j = hour_grid(counts, _ref_frame(counts.sparkSession, ref["pdf"], "ref_p"))
     pa = F.greatest(F.col("c") / F.col("nh"), F.lit(eps))
     pb = F.greatest(F.col("ref_p"), F.lit(eps))
     contrib = F.round((pa - pb) * F.log(pa / pb), 10).cast("decimal(38,10)")
@@ -232,39 +195,13 @@ def finish_bands(
     second streaming aggregation or an approx-sketch whose insertion
     order makes stream and batch disagree.
 
-    Estimator: linear interpolation within the first bin whose
-    cumulative count reaches p·n (uniform-within-bin assumption —
-    error ≤ one bin width, the binned-KS trade). All-integer
-    cumulative arithmetic + the same double finish on stream-drained
-    or batch-computed counts → stream == batch EXACTLY, which
-    ``tests/test_drift_stream_bands.py`` pins. Output:
-    ``(hour_start, n, p50, p95, ...)``.
+    Estimator: ``operators.drift.binned_percentiles`` per hour —
+    linear interpolation within the first bin whose cumulative count
+    reaches p·n (error ≤ one bin width, the binned-KS trade).
+    All-integer cumulative arithmetic + the same double finish on
+    stream-drained or batch-computed counts → stream == batch EXACTLY,
+    which ``tests/test_streaming.py::test_percentile_bands_stream_matches_batch``
+    pins. Output: ``(hour_start, n, p50, p95, ...)``.
     """
-    w_cum = Window.partitionBy("hour_start").orderBy("b")
-    w_h = Window.partitionBy("hour_start")
-    cum = counts.select(
-        "hour_start",
-        "b",
-        "c",
-        F.sum("c").over(w_cum).alias("ch"),
-        F.sum("c").over(w_h).alias("n"),
-    )
-    aggs = [F.max("n").cast("bigint").alias("n")]
-    for p in probs:
-        target = F.lit(float(p)) * F.col("n")
-        hit = F.col("ch") >= target
-        # first qualifying bin: min over (b, cum, c) among hits
-        pick = F.min(
-            F.when(hit, F.struct(F.col("b"), F.col("ch"), F.col("c")))
-        ).alias(f"__pk{int(round(p * 100)):02d}")
-        aggs.append(pick)
-    g = cum.groupBy("hour_start").agg(*aggs)
-    outs = ["hour_start", "n"]
-    for p in probs:
-        name = f"p{int(round(p * 100)):02d}"
-        pk = F.col(f"__pk{name[1:]}")
-        frac = (F.lit(float(p)) * F.col("n") - (pk["ch"] - pk["c"])) / pk["c"]
-        frac = F.least(F.greatest(frac, F.lit(0.0)), F.lit(1.0))
-        val = F.lit(lo) + (pk["b"].cast("double") + frac) * F.lit(width)
-        outs.append(F.round(val, ROUND_N).alias(name))
-    return g.select(*outs)
+    hist = counts.select("hour_start", F.col("b").alias("bin"), F.col("c").alias("n"))
+    return binned_percentiles(hist, lo, width, probs, keys=("hour_start",))

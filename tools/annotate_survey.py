@@ -18,9 +18,11 @@ from __future__ import annotations
 
 import json
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry  # noqa: E402
 
@@ -44,7 +46,7 @@ def main() -> None:
     # green") instead of degrading to "local sweep green"
     import glob as _glob
     last_green: dict[str, str] = {}
-    for path in sorted(_glob.glob("CORRECTNESS_r*.json")):
+    for path in sorted(_glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         mm = re.search(r"_r0*(\d+)", path)
         if not mm:
             continue
@@ -60,7 +62,7 @@ def main() -> None:
     osql = entry.oracle_sql()
 
     lines, changed = [], 0
-    for ln in open("SURVEY.md").read().split("\n"):
+    for ln in open(os.path.join(ROOT, "SURVEY.md")).read().split("\n"):
         m = ROW.match(ln)
         if not m:
             lines.append(ln)
@@ -95,13 +97,13 @@ def main() -> None:
 
     text = "\n".join(lines)
     text = _rewrite_counts(text, qs, osql, block)
-    open("SURVEY.md", "w").write(text)
+    open(os.path.join(ROOT, "SURVEY.md"), "w").write(text)
     print(f"annotated SURVEY.md: {changed} rows updated, X-block sorted")
 
-    rd = open("README.md").read()
+    rd = open(os.path.join(ROOT, "README.md")).read()
     rd2 = _rewrite_counts(rd, qs, osql, block)
     if rd2 != rd:
-        open("README.md", "w").write(rd2)
+        open(os.path.join(ROOT, "README.md"), "w").write(rd2)
         print("README.md counts refreshed")
 
 

@@ -9,9 +9,11 @@ Usage: python tools/audit_plans.py [sf_dir]
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry
 from safedata_pipeline_spark.plans import formatted_plan
@@ -66,7 +68,7 @@ def main() -> None:
             f"| {name} | {a['scans']} | {a['exchanges']} | {a['joins']} | {a['python']} | {a['codegen']} |"
         )
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(out)
     print(f"wrote PLANS.md ({len(rows)} queries)")
 

@@ -13,6 +13,7 @@ fails here too. Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -20,7 +21,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry  # noqa: E402
 from safedata_pipeline_spark.session import get_spark  # noqa: E402
