@@ -11,9 +11,14 @@ Two execution-semantics consequences callers must know about:
 
 1. **Eager execution.** ``pin(df, eager=True)`` launches a Spark job at
    plan-BUILD time — the builder function is no longer lazy. Operators
-   that do this say so in their docstrings; the alternative
-   (``eager=False``) defers materialization to first use but still
-   truncates lineage.
+   that do this say so in their docstrings. ``eager=False`` is only
+   partly lazy under adaptive query execution (``session.get_spark``
+   turns it on): building the checkpoint RDD finalizes the adaptive
+   plan, so every shuffle-map stage of ``df`` runs at pin time and
+   only the final stage waits for the first action, which stores the
+   pinned rows. A lazy pin therefore moves jobs into the step that
+   pins (``SafedataPipeline.measure_utility``: 15 → 39 jobs when its
+   three tables were pinned, before any reader ran).
 
 2. **Fault tolerance.** ``localCheckpoint`` stores blocks on executors
    and is NOT recomputable after executor loss — fine on local[.] and
@@ -68,6 +73,8 @@ def refresh_reliable_flag(spark) -> bool:
 
 def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     """Truncate ``df``'s lineage by materializing it (see module doc).
+    ``eager=False`` still runs ``df``'s shuffle-map stages here under
+    adaptive execution; only the final stage waits for the first action.
 
     Defaults to executor-local checkpointing (fast, auto-released on
     GC); set the ``spark.safedata.reliableCheckpoint`` session conf to
@@ -89,5 +96,6 @@ def pin_eager(df: DataFrame) -> DataFrame:
 
 
 def pin_lazy(df: DataFrame) -> DataFrame:
-    """``pin(df, eager=False)`` as a ``DataFrame.transform`` suffix."""
+    """``pin(df, eager=False)`` as a ``DataFrame.transform`` suffix: the
+    shuffle-map stages run now, the final stage at the first action."""
     return pin(df, eager=False)

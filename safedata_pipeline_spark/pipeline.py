@@ -12,8 +12,11 @@ full copy per transform (privacy.py:5,14,25). Here the protect chain is
 ONE lazy plan — suppression / binning / noise compose via
 ``DataFrame.transform`` and execute in a single job at the sink, with
 the per-step aggregation subqueries (counts, quantile edges) as the
-only extra scans. ``cache()`` pins the protected table only when both
-utility passes will re-read it.
+only extra scans. The utility tables are the one result several readers
+share (the caller's collect, then ``report``), so ``measure_utility``
+pins each of them lazily (``checkpoint.pin_lazy``): the first reader
+fills the pin and every later one scans the pinned rows instead of
+re-running the profile and drift chains.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import NumericType
 
+from safedata_pipeline_spark.checkpoint import pin_lazy
 from safedata_pipeline_spark.operators import compliance as C
 from safedata_pipeline_spark.operators import drift as DR
 from safedata_pipeline_spark.operators import ml_utility as MU
@@ -154,8 +158,14 @@ class SafedataPipeline:
 
     # -- step 4: utility (app.py:205-223) ---------------------------------
     def measure_utility(self, target: str | None = None) -> dict[str, DataFrame]:
+        """Profile before/after, distribution drift and, when ``target``
+        is given, model utility of the protected table against the
+        anonymized input, each as a lazily pinned DataFrame: the first
+        reader computes a table once and later readers (``report``)
+        scan its pinned rows. Under AQE the pins run the tables'
+        shuffle-map stages here (see ``checkpoint``), so most of the
+        utility work is done by this call."""
         before, after = self.df_anon, self.df_protected
-        after.cache()  # re-read by stats + drift (+ model when target given)
         tables = {
             "profile_before": P.basic_stats(before),
             "profile_after": P.basic_stats(after),
@@ -163,6 +173,7 @@ class SafedataPipeline:
         }
         if target is not None:
             tables["model_utility"] = MU.model_utility_check(before, after, target)
+        tables = {name: pin_lazy(df) for name, df in tables.items()}
         self.results["utility_tables"] = tables
         return tables
 
@@ -179,14 +190,15 @@ class SafedataPipeline:
             "config": self.config,
             "compliance_score": self.results.get("compliance_score"),
         }
+        checklist = self.results.get("compliance_df")
+        if checklist is None:  # built only when compliance() never ran
+            checklist = C.default_checklist(self.spark)
         path = REP.save_html_report(
             html_path,
             summary=summary,
             risk_summary=self.results.get("risk", {}),
             util_tables=self.results.get("utility_tables", {}),
-            compliance_df=self.results.get(
-                "compliance_df", C.default_checklist(self.spark)
-            ),
+            compliance_df=checklist,
         )
         if pdf_path:
             REP.try_make_pdf(html_path, pdf_path)

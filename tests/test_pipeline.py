@@ -1,5 +1,6 @@
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from safedata_pipeline_spark.pipeline import SafedataPipeline
@@ -275,3 +276,97 @@ def test_audit_report_renders_secrets_and_domains(spark, tmp_path):
     assert "Credential / Secret Scan" in html and "Domain Concentration" in html
     assert "n_aws_key" in html and "spam.com" in html
     assert "good.org" not in html.split("Domain Concentration")[1]  # under the cap
+
+
+def _split_customer(spark, sf_dir):
+    cust = load_table(spark, sf_dir, "customer")
+    return cust.where(F.col("c_custkey") % 2 == 1), cust.where(F.col("c_custkey") % 2 == 0)
+
+
+def _protect(p):
+    return p.protect(
+        sdc_cols=["c_mktsegment"], generalize_cols=["c_acctbal"], dp_cols=["c_nationkey", "c_acctbal"]
+    )
+
+
+def _jobs(spark, group, fn):
+    """Jobs ``fn`` launches, counted under its own job group."""
+    from perfbench.sparkstats import counters
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return counters(spark, [group]).jobs
+
+
+def test_report_reads_pinned_utility_tables(spark, sf_dir, tmp_path):
+    """The utility tables are computed once: after their first collect,
+    ``report`` and any later reader scan the pinned rows (one job per
+    table), the rows equal freshly computed unpinned tables, and the
+    protected table is not left cached."""
+    from safedata_pipeline_spark.operators import drift as DR
+    from safedata_pipeline_spark.operators import profile as P
+
+    real, anon = _split_customer(spark, sf_dir)
+    p = SafedataPipeline(spark).load(real, anon)
+    after = _protect(p)
+    tables = p.measure_utility()
+    assert p.df_protected.is_cached is False
+    first = {k: df.collect() for k, df in tables.items()}
+    p.compliance({"pii_identified"})
+
+    report_jobs = _jobs(spark, "pinned-utility:report", lambda: p.report(str(tmp_path / "r.html")))
+    assert report_jobs <= len(tables) + 1, report_jobs
+    # a new Dataset per table: repeating an action on the same Dataset
+    # reuses that Dataset's executed plan, pinned or not
+    again = {}
+    reread_jobs = _jobs(
+        spark,
+        "pinned-utility:reread",
+        lambda: again.update({k: df.select("*").collect() for k, df in tables.items()}),
+    )
+    assert reread_jobs <= len(tables), reread_jobs
+    assert again == first
+
+    fresh = {
+        "profile_before": P.basic_stats(anon),
+        "profile_after": P.basic_stats(after),
+        "drift": DR.distribution_drift(anon, after),
+    }
+    assert set(fresh) == set(tables)
+    for name, df in fresh.items():
+        assert sorted(first[name], key=str) == sorted(df.collect(), key=str), name
+        assert tables[name].dtypes == df.dtypes, name
+
+
+@pytest.fixture(scope="module")
+def utility_schemas(spark, sf_dir):
+    p = SafedataPipeline(spark).load(*_split_customer(spark, sf_dir))
+    _protect(p)
+    return {k: df.dtypes for k, df in p.measure_utility().items()}
+
+
+@pytest.mark.parametrize("n", [0, 1])
+def test_pipeline_degenerate_input(spark, sf_dir, tmp_path, utility_schemas, n):
+    """risk → protect → audit → utility → compliance → report → sink on
+    an empty and a one-row input: every step returns, the utility tables
+    keep their normal schemas and the report renders every section."""
+    real, anon = _split_customer(spark, sf_dir)
+    p = SafedataPipeline(spark).load(real.limit(n), anon.limit(n))
+    p.assess_risk(["c_nationkey", "c_acctbal", "c_mktsegment"], "c_custkey")
+    protected = _protect(p)
+    p.audit_anonymity(["c_mktsegment", "c_acctbal"])
+    tables = p.measure_utility()
+    for name, df in tables.items():
+        df.collect()
+        assert df.dtypes == utility_schemas[name], name
+    p.compliance({"pii_identified"})
+    content = open(p.report(str(tmp_path / "r.html")), encoding="utf-8").read()
+    for section in ("Run Summary", "Risk Assessment", "Utility Metrics", "Compliance Checklist"):
+        assert section in content, section
+    sink = str(tmp_path / "protected.parquet")
+    protected.write.mode("overwrite").parquet(sink)
+    assert spark.read.parquet(sink).count() <= n
