@@ -17,8 +17,9 @@ Two execution-semantics consequences callers must know about:
    plan, so every shuffle-map stage of ``df`` runs at pin time and
    only the final stage waits for the first action, which stores the
    pinned rows. A lazy pin therefore moves jobs into the step that
-   pins (``SafedataPipeline.measure_utility``: 15 → 39 jobs when its
-   three tables were pinned, before any reader ran).
+   pins: ``SafedataPipeline.measure_utility`` launches most of its
+   jobs itself (19 of the 22 it takes with its tables' first collect
+   on the sf0.001 customer split), before any reader runs.
 
 2. **Fault tolerance.** ``localCheckpoint`` stores blocks on executors
    and is NOT recomputable after executor loss — fine on local[.] and

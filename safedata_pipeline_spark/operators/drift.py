@@ -9,6 +9,9 @@ Behavior parity targets (reference: /root/reference/modules/utility.py):
                              NULL when either side is empty)
   * ``distribution_drift`` — utility.py:112-123 (per shared column:
                              numeric → KS, else → chi²)
+  * ``profiles_and_drift`` — utility.py:17-123 as app.py:205-223 calls
+                             it: both tables' profiles and their drift
+                             from one shared pass
 
 KS construction (no Spark builtin is two-sample): tag both sides, group
 by value (ties merge, so the ECDF is evaluated at distinct points — the
@@ -86,15 +89,27 @@ def _ecdf(g: DataFrame, val_col: str) -> DataFrame:
     )
 
 
-def _ks_stat() -> F.Column:
-    """max |ca/na − cb/nb| over an ECDF frame; NULL when either side
-    has fewer than ``MIN_KS_ROWS`` values."""
+def _ks_stat(ca: str = "ca", cb: str = "cb", na: str = "na", nb: str = "nb") -> Column:
+    """max |ca/na − cb/nb| over an ECDF frame (cumulative side counts
+    ``ca``/``cb``, side totals ``na``/``nb``); NULL when either side has
+    fewer than ``MIN_KS_ROWS`` values. The guard sits inside the max:
+    under ANSI a side with no values would otherwise divide by zero on
+    every row before an outer guard could discard the result."""
+    na_c, nb_c = F.col(na), F.col(nb)
+    gap = F.abs(F.col(ca) / na_c - F.col(cb) / nb_c)
+    enough = (na_c >= MIN_KS_ROWS) & (nb_c >= MIN_KS_ROWS)
+    return F.round(F.max(F.when(enough, gap)), ROUND_N)
+
+
+def _chi2_stat(oa: str = "oa", ob: str = "ob") -> Column:
+    """Σ (oa−ob)²/(oa+ob+1e-9) over aligned per-category side counts,
+    each term cast to DECIMAL(38,12) so the sum is order-independent;
+    NULL when either side is empty."""
+    a, b = F.col(oa), F.col(ob)
+    contrib = (((a - b) * (a - b)) / (a + b + F.lit(1e-9))).cast("decimal(38,12)")
     return F.when(
-        (F.max("na") >= MIN_KS_ROWS) & (F.max("nb") >= MIN_KS_ROWS),
-        F.round(
-            F.max(F.abs(F.col("ca") / F.col("na") - F.col("cb") / F.col("nb"))),
-            ROUND_N,
-        ),
+        (F.sum(a) > 0) & (F.sum(b) > 0),
+        F.round(F.sum(contrib).cast("double"), ROUND_N),
     )
 
 
@@ -220,16 +235,7 @@ def chi2_categorical(df_a: DataFrame, df_b: DataFrame, col: str, na_label: str =
     joined = ta.join(tb, on="cat", how="full_outer").select(
         F.coalesce("oa", F.lit(0)).alias("oa"), F.coalesce("ob", F.lit(0)).alias("ob")
     )
-    contrib = (
-        ((F.col("oa") - F.col("ob")) * (F.col("oa") - F.col("ob")))
-        / (F.col("oa") + F.col("ob") + F.lit(1e-9))
-    ).cast("decimal(38,12)")
-    return joined.agg(
-        F.when(
-            (F.sum("oa") > 0) & (F.sum("ob") > 0),
-            F.round(F.sum(contrib).cast("double"), ROUND_N),
-        ).alias("chi2")
-    )
+    return joined.agg(_chi2_stat().alias("chi2"))
 
 
 def _melt_numeric(df: DataFrame, cols: list[str], ka: int, kb: int) -> DataFrame:
@@ -264,6 +270,24 @@ def _melt_categorical(df: DataFrame, cols: list[str], ka: int, kb: int, na_label
     )
 
 
+def _drift_columns(
+    df_a: DataFrame, df_b: DataFrame, cols: list[str] | None = None
+) -> tuple[list[str], list[str]]:
+    """The drift table's columns (``cols``, default the shared ones in
+    ``df_a`` order) split into KS columns — numeric on both sides — and
+    χ² columns: everything else, including a column whose type differs
+    by side (a double binned into string labels)."""
+    types_a = {f.name: f.dataType for f in df_a.schema.fields}
+    types_b = {f.name: f.dataType for f in df_b.schema.fields}
+    shared = [c for c in df_a.columns if c in types_b] if cols is None else cols
+    num_cols = [
+        c
+        for c in shared
+        if isinstance(types_a[c], NumericType) and isinstance(types_b[c], NumericType)
+    ]
+    return num_cols, [c for c in shared if c not in num_cols]
+
+
 def distribution_drift(
     df_a: DataFrame,
     df_b: DataFrame,
@@ -292,16 +316,7 @@ def distribution_drift(
     bin width), so the cumulative window input is bounded at
     ``bins`` rows per column regardless of cardinality.
     """
-    types_a = {f.name: f.dataType for f in df_a.schema.fields}
-    types_b = {f.name: f.dataType for f in df_b.schema.fields}
-    shared = [c for c in df_a.columns if c in types_b] if cols is None else cols
-    num_cols = [
-        c
-        for c in shared
-        if isinstance(types_a[c], NumericType) and isinstance(types_b[c], NumericType)
-    ]
-    cat_cols = [c for c in shared if c not in num_cols]
-
+    num_cols, cat_cols = _drift_columns(df_a, df_b, cols)
     parts: list[DataFrame] = []
     if num_cols:
         u = _melt_numeric(df_a, num_cols, 1, 0).unionByName(_melt_numeric(df_b, num_cols, 0, 1))
@@ -346,16 +361,7 @@ def distribution_drift(
             _melt_categorical(df_b, cat_cols, 0, 1, na_label)
         )
         g = u.groupBy("column", "cat").agg(F.sum("ka").alias("oa"), F.sum("kb").alias("ob"))
-        contrib = (
-            ((F.col("oa") - F.col("ob")) * (F.col("oa") - F.col("ob")))
-            / (F.col("oa") + F.col("ob") + F.lit(1e-9))
-        ).cast("decimal(38,12)")
-        chi = g.groupBy("column").agg(
-            F.when(
-                (F.sum("oa") > 0) & (F.sum("ob") > 0),
-                F.round(F.sum(contrib).cast("double"), ROUND_N),
-            ).alias("chi2")
-        )
+        chi = g.groupBy("column").agg(_chi2_stat().alias("chi2"))
         parts.append(
             chi.select(
                 "column",
@@ -368,6 +374,45 @@ def distribution_drift(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def profiles_and_drift(
+    df_a: DataFrame, df_b: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``basic_stats(df_a)``, ``basic_stats(df_b)`` and
+    ``distribution_drift(df_a, df_b)`` — the same rows and types — from
+    ONE ``profile.column_stats`` pass over both tables: the three tables
+    share its tagged melt (the per-(column, value) counts of each side)
+    and its one ``ranged_prefix``, which gives both sides' quartiles and
+    the KS statistic from the same cumulative counts; χ² regroups the
+    melt by category. Only the float moments stay a wide aggregate per
+    table, in its natural scan order.
+
+    A drift row exists where ``distribution_drift`` makes one: for a KS
+    column, when either side has a non-null value; for a χ² column, when
+    either side has a row."""
+    from safedata_pipeline_spark.operators import profile as P
+
+    num_cols, cat_cols = _drift_columns(df_a, df_b)
+    stats = P.column_stats(
+        [df_a, df_b],
+        num_aggs={"ks_stat": _ks_stat("__cum_k0", "__cum_k1", "__tot_k0", "__tot_k1")},
+        cat_cols=cat_cols,
+        cat_aggs={"chi2": _chi2_stat("k0", "k1")},
+    )
+    null_d = F.lit(None).cast("double")
+    valued = F.col("nunique_0") + F.col("nunique_1") > 0
+    ks = stats.where(F.col("column").isin(*num_cols) & valued).select(
+        "column", F.lit("numeric").alias("type"), "ks_stat", null_d.alias("chi2")
+    )
+    chi = stats.where(F.col("column").isin(*cat_cols)).select(
+        "column",
+        F.lit("categorical").alias("type"),
+        null_d.alias("ks_stat"),
+        (F.col("chi2") if cat_cols else null_d).alias("chi2"),
+    )
+    drift = ks.unionByName(chi)
+    return P.profile_from_stats(df_a, stats, 0), P.profile_from_stats(df_b, stats, 1), drift
 
 
 def psi_drift(

@@ -203,8 +203,8 @@ def _snap2(x: float) -> float:
     return math.floor(x * 100.0 + 0.5) / 100.0
 
 
-def bin_label(lo: float, hi: float) -> str:
-    return f"[{_snap2(lo):.2f}, {_snap2(hi):.2f})"
+def bin_label(lo: float, hi: float, closed: bool = False) -> str:
+    return f"[{_snap2(lo):.2f}, {_snap2(hi):.2f}{']' if closed else ')'}"
 
 
 def generalize_numeric(df: DataFrame, cols: list[str], bins: int = 10, exact: bool = True) -> DataFrame:
@@ -214,26 +214,26 @@ def generalize_numeric(df: DataFrame, cols: list[str], bins: int = 10, exact: bo
     edges. Bin membership here is ``[lo, hi)`` with the last bin closed
     ``[lo, hi]`` (the reference's qcut uses ``(lo, hi]`` — our
     convention matches the label text instead; same equal-frequency
-    semantics). Nulls stay null. Columns with <2 distinct edges are
-    left untouched.
+    semantics). Nulls stay null. The output is a string column whatever
+    the data: a constant column is the one closed bin ``"[v, v]"`` and a
+    column with no value (empty or all-NULL) comes back all NULL.
 
     The row pass is a pure CASE-chain expression (whole-stage codegen,
     no join, no shuffle) built from the ≤bins+1 collected edges.
     """
     for c in _numeric_cols(df, cols):
         edges = quantile_edges(df, c, bins, exact=exact)
-        if len(edges) < 2:
-            continue
+        bounds = list(zip(edges, edges[1:])) or [(e, e) for e in edges]
+        null_s = F.lit(None).cast("string")
         expr: Column | None = None
-        for i in range(len(edges) - 1):
-            lo, hi = edges[i], edges[i + 1]
-            last = i == len(edges) - 2
+        for i, (lo, hi) in enumerate(bounds):
+            last = i == len(bounds) - 1
             cond = (F.col(c) >= F.lit(lo)) & (
                 (F.col(c) <= F.lit(hi)) if last else (F.col(c) < F.lit(hi))
             )
-            lbl = F.lit(bin_label(lo, hi))
+            lbl = F.lit(bin_label(lo, hi, closed=lo == hi))
             expr = F.when(cond, lbl) if expr is None else expr.when(cond, lbl)
-        df = df.withColumn(c, expr.otherwise(F.lit(None).cast("string")))
+        df = df.withColumn(c, null_s if expr is None else expr.otherwise(null_s))
     return df
 
 

@@ -12,11 +12,14 @@ full copy per transform (privacy.py:5,14,25). Here the protect chain is
 ONE lazy plan — suppression / binning / noise compose via
 ``DataFrame.transform`` and execute in a single job at the sink, with
 the per-step aggregation subqueries (counts, quantile edges) as the
-only extra scans. The utility tables are the one result several readers
-share (the caller's collect, then ``report``), so ``measure_utility``
-pins each of them lazily (``checkpoint.pin_lazy``): the first reader
-fills the pin and every later one scans the pinned rows instead of
-re-running the profile and drift chains.
+only extra scans. The utility step computes its three tables (both
+profiles and the drift table) from one pass, ``drift.profiles_and_drift``:
+one tagged melt of before ∪ after and one ranged prefix feed both
+profiles' value statistics and quartiles and the KS/χ² drift. The
+tables are the one result several readers share (the caller's collect,
+then ``report``), so ``measure_utility`` pins each of them lazily
+(``checkpoint.pin_lazy``): the first reader fills the pin and every
+later one scans the pinned rows instead of re-running the utility pass.
 """
 
 from __future__ import annotations
@@ -30,7 +33,6 @@ from safedata_pipeline_spark.checkpoint import pin_lazy
 from safedata_pipeline_spark.operators import compliance as C
 from safedata_pipeline_spark.operators import drift as DR
 from safedata_pipeline_spark.operators import ml_utility as MU
-from safedata_pipeline_spark.operators import profile as P
 from safedata_pipeline_spark.operators import protect as PR
 from safedata_pipeline_spark.operators import risk as RK
 from safedata_pipeline_spark import reporting as REP
@@ -162,14 +164,18 @@ class SafedataPipeline:
         is given, model utility of the protected table against the
         anonymized input, each as a lazily pinned DataFrame: the first
         reader computes a table once and later readers (``report``)
-        scan its pinned rows. Under AQE the pins run the tables'
+        scan its pinned rows. The profiles and the drift table come
+        from one shared pass (``drift.profiles_and_drift``), row- and
+        type-identical to ``basic_stats`` on each side and
+        ``distribution_drift``. Under AQE the pins run the tables'
         shuffle-map stages here (see ``checkpoint``), so most of the
         utility work is done by this call."""
         before, after = self.df_anon, self.df_protected
+        profile_before, profile_after, drift = DR.profiles_and_drift(before, after)
         tables = {
-            "profile_before": P.basic_stats(before),
-            "profile_after": P.basic_stats(after),
-            "drift": DR.distribution_drift(before, after),
+            "profile_before": profile_before,
+            "profile_after": profile_after,
+            "drift": drift,
         }
         if target is not None:
             tables["model_utility"] = MU.model_utility_check(before, after, target)

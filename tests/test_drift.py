@@ -44,6 +44,24 @@ def test_ks_small_side_is_null(spark):
     assert _one(D.ks_statistic(dfa, dfb, "v")) is None
 
 
+@pytest.mark.parametrize("empty_side", ["no_rows", "all_null"])
+def test_ks_null_when_one_side_has_no_values(spark, empty_side):
+    """Every KS path gives NULL (the reference's NaN for a side with <5
+    values), not an ANSI divide-by-zero, when one side has no non-null
+    value — on either side."""
+    full = spark.createDataFrame([(float(i),) for i in range(10)], "v double")
+    rows = [] if empty_side == "no_rows" else [(None,)] * 10
+    empty = spark.createDataFrame(rows, "v double")
+    for dfa, dfb in ((full, empty), (empty, full)):
+        assert _one(D.ks_statistic(dfa, dfb, "v")) is None
+        assert _one(D.ks_statistic_binned(dfa, dfb, "v", bins=16)) is None
+        for exact in (True, False):
+            got = D.distribution_drift(dfa, dfb, exact=exact).collect()
+            assert [(r.column, r.ks_stat) for r in got] == [("v", None)], exact
+        fused = D.profiles_and_drift(dfa, dfb)[2].collect()
+        assert [(r.column, r.ks_stat) for r in fused] == [("v", None)]
+
+
 def test_ks_binned_close_to_exact(spark):
     rng = np.random.default_rng(3)
     a = rng.normal(0, 1, 500)

@@ -342,27 +342,101 @@ def test_report_reads_pinned_utility_tables(spark, sf_dir, tmp_path):
         assert tables[name].dtypes == df.dtypes, name
 
 
-@pytest.fixture(scope="module")
-def utility_schemas(spark, sf_dir):
+def test_measure_utility_job_budget(spark, sf_dir):
+    """``measure_utility`` plus the first collect of its tables stays
+    within the jobs of one fused utility pass (42 when the two profiles
+    and the drift table were three separate plans)."""
     p = SafedataPipeline(spark).load(*_split_customer(spark, sf_dir))
     _protect(p)
-    return {k: df.dtypes for k, df in p.measure_utility().items()}
+    tables = {}
+    jobs = _jobs(
+        spark,
+        "utility-budget",
+        lambda: tables.update(
+            {k: df.collect() for k, df in p.measure_utility().items()}
+        ),
+    )
+    assert set(tables) == {"profile_before", "profile_after", "drift"}
+    assert jobs <= 22, jobs
+
+
+def _rows(df):
+    # repr keeps NaN equal to NaN and -0.0 apart from 0.0
+    return sorted(map(repr, df.collect()))
+
+
+def test_utility_tables_match_single_table_operators(spark):
+    """The fused utility pass returns exactly the rows and types of
+    ``basic_stats`` on each side and ``distribution_drift`` of the two:
+    -0.0 beside 0.0 with NaN and NULLs, a column int on one side and
+    double on the other, numeric on one side and string on the other, a
+    literal "NA" beside NULL, columns on one side only, 0- and 1-row
+    sides."""
+    from safedata_pipeline_spark.operators import drift as DR
+    from safedata_pipeline_spark.operators import profile as P
+
+    nan = float("nan")
+    a = spark.createDataFrame(
+        [
+            (1, -0.0, 1, "x", "NA", 3.0, "q"),
+            (2, 0.0, 2, None, None, nan, "r"),
+            (3, nan, 2, "y", "NA", -0.0, "s"),
+            (4, None, None, "x", "b", 0.0, "t"),
+            (5, 1.0, 5, "z", None, 2.0, "u"),
+            (6, 0.0, 7, "z", "c", -0.0, "v"),
+        ],
+        "id int, d double, i int, s string, n string, m double, only_a string",
+    )
+    b = spark.createDataFrame(
+        [
+            (1, 0.0, 1.0, "x", None, "-0.0", 10),
+            (2, -0.0, 2.0, "NA", "NA", "0.0", 20),
+            (3, None, 2.5, "q", "NA", None, 30),
+            (4, 3.0, None, "x", "b", "3.0", 40),
+            (5, 1.0, 5.0, None, None, "NaN", 50),
+            (6, 2.0, 7.0, "z", "c", "2.0", 60),
+        ],
+        "id int, d double, i double, s string, n string, m string, only_b bigint",
+    )
+    one = lambda df: df.where("id = 1")
+    for left, right in ((a, b), (b, a), (a.limit(0), b), (one(a), one(b).limit(0))):
+        fused = DR.profiles_and_drift(left, right)
+        single = (
+            P.basic_stats(left),
+            P.basic_stats(right),
+            DR.distribution_drift(left, right),
+        )
+        for name, got, want in zip(("profile_a", "profile_b", "drift"), fused, single):
+            assert _rows(got) == _rows(want), name
+            assert got.dtypes == want.dtypes, name
+
+
+@pytest.fixture(scope="module")
+def normal_schemas(spark, sf_dir):
+    p = SafedataPipeline(spark).load(*_split_customer(spark, sf_dir))
+    protected = _protect(p)
+    tables = {k: df.dtypes for k, df in p.measure_utility().items()}
+    return {"protected": protected.dtypes, **tables}
 
 
 @pytest.mark.parametrize("n", [0, 1])
-def test_pipeline_degenerate_input(spark, sf_dir, tmp_path, utility_schemas, n):
+def test_pipeline_degenerate_input(spark, sf_dir, tmp_path, normal_schemas, n):
     """risk → protect → audit → utility → compliance → report → sink on
-    an empty and a one-row input: every step returns, the utility tables
-    keep their normal schemas and the report renders every section."""
+    an empty and a one-row input: every step returns, the protected
+    table and the utility tables keep their normal schemas and the
+    report renders every section."""
     real, anon = _split_customer(spark, sf_dir)
     p = SafedataPipeline(spark).load(real.limit(n), anon.limit(n))
     p.assess_risk(["c_nationkey", "c_acctbal", "c_mktsegment"], "c_custkey")
     protected = _protect(p)
+    assert protected.dtypes == normal_schemas["protected"]
+    assert dict(protected.dtypes)["c_acctbal"] == "string"
+    assert dict(protected.dtypes)["c_nationkey"] == "double"
     p.audit_anonymity(["c_mktsegment", "c_acctbal"])
     tables = p.measure_utility()
     for name, df in tables.items():
         df.collect()
-        assert df.dtypes == utility_schemas[name], name
+        assert df.dtypes == normal_schemas[name], name
     p.compliance({"pii_identified"})
     content = open(p.report(str(tmp_path / "r.html")), encoding="utf-8").read()
     for section in ("Run Summary", "Risk Assessment", "Utility Metrics", "Compliance Checklist"):
